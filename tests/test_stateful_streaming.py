@@ -10,7 +10,10 @@ import datetime as dt
 
 import pytest
 
-from youtube_analytics_lakehouse_databricks_spark.streaming.stateful import streaming_sessionize
+from youtube_analytics_lakehouse_databricks_spark.streaming.stateful import (
+    SESSION_GAP_US,
+    streaming_sessionize,
+)
 
 
 def _write_batch(spark, path, rows):
@@ -45,6 +48,35 @@ def few_partitions(spark):
     spark.conf.set("spark.sql.shuffle.partitions", "1")
     yield
     spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+@pytest.fixture
+def no_idle_batches(spark):
+    # the processing-time timeout asks for an idle batch after every batch,
+    # so an availableNow query never runs dry and stops only at the await
+    # timeout; without idle batches it stops after the data batch
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, prev)
+
+
+@pytest.mark.filterwarnings("ignore")
+def test_streaming_sessionize_gap_close_one_trigger(
+    spark, tmp_path, few_partitions, no_idle_batches
+):
+    """Fast variant of the slow test below: one availableNow trigger over
+    events straddling SESSION_GAP_US emits the one session the gap closes."""
+    src, out, ckpt = tmp_path / "events", tmp_path / "out", tmp_path / "ckpt"
+    t0, gap = dt.datetime(2025, 8, 1, 10), dt.timedelta(microseconds=SESSION_GAP_US)
+    past_gap = 2 * gap + dt.timedelta(microseconds=1)
+    # exactly the gap extends user 1's session; 1 us past it closes it
+    _write_batch(spark, src, [(1, t0, 1.0), (1, t0 + gap, 2.0), (1, t0 + past_gap, 4.0), (2, t0, 8.0)])
+    running = {q.id for q in spark.streams.active}
+    closed = _run_once(spark, src, out, ckpt)
+    assert {q.id for q in spark.streams.active} <= running  # finished, no await timeout
+    assert [tuple(r) for r in closed] == [(1, t0, t0 + gap, 2, 3.0, "gap")]
 
 
 @pytest.mark.filterwarnings("ignore")

@@ -1,8 +1,9 @@
 """Capture .explain('formatted') for every headline bench query into
-plans/r16/<query>_<tag>.txt, plus a one-line summary (exchanges, join
+plans/<round>/<query>_<tag>.txt, plus a one-line summary (exchanges, join
 strategies, python-eval nodes, pushed filters) to stdout.
 
-Usage: python tools/capture_plans_r16.py <tag> [sf_dir] [query ...]
+Usage: python tools/capture_plans.py <round> [tag] [sf_dir] [query ...]
+  round: output directory under plans/, e.g. "r17"
   tag: "before" or "after"
 """
 
@@ -23,12 +24,15 @@ def main() -> None:
     from youtube_analytics_lakehouse_databricks_spark.queries import registry
     from youtube_analytics_lakehouse_databricks_spark.session import get_spark
 
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    round_dir = sys.argv.pop(1)
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
     spark = get_spark(app_name=f"plans-{tag}")
     reg = {**registry(), **_bench_only()}
     names = sys.argv[3:] or [n for n in HEADLINE if n in reg]
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r16")
+    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", round_dir)
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         try:

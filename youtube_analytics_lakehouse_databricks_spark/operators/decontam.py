@@ -260,7 +260,8 @@ def semantic_decontaminate(
             # with a shape error. This matters since the gate composition
             # scores EVERY input row (r11 shuffle shape): a bad embedding
             # on a doc an earlier gate already dropped must not kill the
-            # shard (the multimodal contract — audit rows, not failures).
+            # shard: a bad row yields a NULL/False audit row, never a
+            # task failure.
             def _usable(v) -> bool:
                 return v is not None and len(v) == dim
 

@@ -122,6 +122,10 @@ def jaccard_verify_sets(
     """Exact shingle-set Jaccard >= threshold over candidate pairs, with
     the sets kept as arrays: |A ∩ B| via array_intersect, union by
     inclusion-exclusion — no shingle-level explode or join anywhere.
+    Not lazy with ``reduce_sets`` on (the default): the call itself runs
+    Spark jobs — it materializes the candidates and counts them to pick
+    the join strategy. The member sets are cut too and materialize on
+    the first action over the returned frame.
 
     The sets frame is first cut down to CANDIDATE MEMBERS with a
     semi-join on the (bounded: <= 2 * |candidates|) distinct id set —

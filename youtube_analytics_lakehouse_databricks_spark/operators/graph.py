@@ -91,6 +91,9 @@ def connected_components(
             eager=True,
         )
         labels = new_labels
+        # durable=True: a reliable checkpoint runs the plan once for the
+        # action and again for the write, so ``n`` can count a row twice;
+        # only ``== 0`` (converged) is meaningful, never the magnitude
         if int(obs.get["n"]) == 0:
             break
     assert labels is not None  # max_iter >= 1

@@ -111,8 +111,11 @@ def warn_unknown_values(
 
 
 def run_checks(checks: list[CheckResult]) -> dict[str, dict]:
-    """Evaluate all checks; returns {name: {count, severity, passed}}."""
-    return {
-        c.name: {"count": c.count(), "severity": c.severity, "passed": c.passed()}
-        for c in checks
-    }
+    """Evaluate all checks; returns {name: {count, severity, passed}}.
+    Each check's violations are counted once; ``passed`` derives from that
+    count instead of counting again."""
+    out = {}
+    for c in checks:
+        n = c.count()
+        out[c.name] = {"count": n, "severity": c.severity, "passed": n == 0}
+    return out

@@ -6,9 +6,9 @@ Scale notes: ``spark.read.json`` with an explicit schema is a streaming
 line parser — no sampling pass, no schema inference job, splittable per
 file; PERMISSIVE mode routes malformed lines into a corrupt-record
 column instead of failing the task (the multi-TB reality: some shard
-always carries a truncated line). The audit frame is the same contract
-the multimodal extractors honor: foreign bytes yield audit rows, never
-task failures and never silent loss.
+always carries a truncated line). The audit frame holds the contract:
+a line that does not parse yields an audit row, never a task failure
+and never silent loss.
 """
 
 from __future__ import annotations
