@@ -384,7 +384,7 @@ class DriverFS:
 def driver_read_parquet(spark, directory: str, op: str):
     """A SMALL parquet directory as one pyarrow Table, read driver-side
     through the session's Hadoop FileSystem — the object-store route for
-    index ARTIFACTS (centroids, meta, PQ codebooks: KB–MB each), so
+    index ARTIFACTS (centroids, meta, PQ/OPQ codebooks: KB–MB each), so
     an index whose root lives on ``s3a://``/``hdfs://`` serves without a
     locally-mounted staging copy. Lists the part files, streams each
     through ``read_bytes``, parses from buffers; raises the named

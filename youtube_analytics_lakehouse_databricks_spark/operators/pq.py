@@ -108,17 +108,17 @@ class PQModel:
         return cls(codebooks=cb)
 
 
-def _sample_matrix(df: DataFrame, id_col: str, vec_col: str, n: int):
+def _sample_matrix(df: DataFrame, id_col: str, vec_col: str, n: int, op: str = "train_pq"):
     import numpy as np
 
     rows = df.select(id_col, vec_col).orderBy(id_col).limit(n).collect()
     if not rows:
-        raise ValueError("train_pq: empty input")
+        raise ValueError(f"{op}: empty input")
     try:
         return np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
     except ValueError:
         raise ValueError(
-            f"train_pq: ragged {vec_col} dimensions in the training sample"
+            f"{op}: ragged {vec_col} dimensions in the training sample"
         ) from None
 
 
@@ -262,12 +262,35 @@ def pq_topk(
         raise ValueError("pq_topk: empty query batch")
     q_ids = np.array([r[id_col] for r in rows], dtype=np.int64)
     q_mat = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
+    return _adc_scan(
+        codes_df, id_col, q_ids, q_mat, model,
+        k=k, exclude_self=exclude_self, op="pq_topk", vec_col=vec_col,
+    )
+
+
+def _adc_scan(
+    codes_df: DataFrame,
+    id_col: str,
+    q_ids,
+    q_mat,
+    model: PQModel,
+    *,
+    k: int,
+    exclude_self: bool,
+    op: str,
+    vec_col: str,
+) -> DataFrame:
+    """The ADC scan body over a driver-resident query matrix — shared by
+    pq_topk (which collects its query DataFrame first) and opq_topk
+    (whose queries are already driver-side after the rotation, so it
+    skips a createDataFrame+collect round-trip)."""
+    import numpy as np
 
     cb = np.asarray(model.codebooks, dtype=np.float64)
     mm, n_codes, d_sub = cb.shape
     if q_mat.shape[1] != mm * d_sub:
         raise ValueError(
-            f"pq_topk: {vec_col} is {q_mat.shape[1]}-dim but the model "
+            f"{op}: {vec_col} is {q_mat.shape[1]}-dim but the model "
             f"was trained on {mm * d_sub}-dim vectors"
         )
     q_norm = np.maximum(np.linalg.norm(q_mat, axis=1), 1e-30)
