@@ -352,7 +352,8 @@ def _bench_only() -> dict[str, Query]:
 # Jaccard verification; the retired row was the documented brute-force
 # all-pairs ANTI-pattern, kept only for series continuity). Each
 # successor names its fold at the query site (the relational.py NOTE
-# pattern); the underlying operators stay importable and tested. Final
+# pattern). The retired builders, and the operators only they called,
+# were deleted later; the successors above carry their surfaces. Final
 # r13-session readings for the retired series, quiet box, sf0.1:
 # token_explode_counts 0.180, doc_fingerprints 0.234, value_percentiles
 # 0.211, signup_followup_window 0.387, ngram_jaccard_pairs 0.615 —

@@ -198,14 +198,11 @@ def test_ivfpq_refined_footer_checks_unreachable_raise(spark, tmp_path):
         )
 
 
-def test_pq_and_opq_model_load_unreachable_raise(spark):
-    from youtube_analytics_lakehouse_databricks_spark.operators.opq import OPQModel
+def test_pq_model_load_unreachable_raises(spark):
     from youtube_analytics_lakehouse_databricks_spark.operators.pq import PQModel
 
     with pytest.raises(RemotePathError, match="PQModel.load"):
         PQModel.load(NOSUCH, spark)
-    with pytest.raises(RemotePathError, match="OPQModel.load"):
-        OPQModel.load(NOSUCH, spark)
 
 
 def test_curation_state_save_load_unreachable_raise(spark):
@@ -432,8 +429,7 @@ def test_remote_route_success_paths_bit_identical(spark, tmp_path, monkeypatch):
     against the local route on the same indexes."""
     import youtube_analytics_lakehouse_databricks_spark.fsops as fsops
     import youtube_analytics_lakehouse_databricks_spark.operators.ivf_index as ivf
-    from youtube_analytics_lakehouse_databricks_spark.operators.opq import OPQModel, train_opq
-    from youtube_analytics_lakehouse_databricks_spark.operators.pq import PQModel, train_pq
+    from youtube_analytics_lakehouse_databricks_spark.operators.pq import PQModel
 
     df = _df(spark, n=90)
     extra = _df(spark, n=30, start=90, seed=11)
@@ -447,7 +443,7 @@ def test_remote_route_success_paths_bit_identical(spark, tmp_path, monkeypatch):
 
     with monkeypatch.context() as m:
         # every is_local_path consumer: ivf_index binds at module level,
-        # pq/opq/curation import inside the function bodies (= fsops)
+        # pq/curation import inside the function bodies (= fsops)
         m.setattr(fsops, "is_local_path", lambda p: False)
         m.setattr(ivf, "is_local_path", lambda p: False)
         # appends load the frozen state through the Hadoop route
@@ -467,9 +463,6 @@ def test_remote_route_success_paths_bit_identical(spark, tmp_path, monkeypatch):
         ).collect()
         remote_rows = ivf._corpus_rows(f"{flat}/corpus", spark)
         pq_model = PQModel.load(f"{pqp}/pq_model", spark)
-        opq = train_opq(df, "vec_id", "embedding", m=4, sample_rows=64)
-        opq.save(spark, f"{tmp_path}/opq")
-        opq_loaded = OPQModel.load(f"{tmp_path}/opq", spark)
 
     # local route over the SAME (appended) indexes
     local_flat = ivf.ivf_search(
@@ -489,9 +482,6 @@ def test_remote_route_success_paths_bit_identical(spark, tmp_path, monkeypatch):
     assert np.array_equal(
         np.asarray(pq_model.codebooks),
         np.asarray(PQModel.load(f"{pqp}/pq_model").codebooks),
-    )
-    assert np.array_equal(
-        np.asarray(opq_loaded.rotation), np.asarray(opq.rotation)
     )
 
 

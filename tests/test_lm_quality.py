@@ -332,38 +332,6 @@ def test_perplexity_buckets_head_middle_tail(spark):
     assert order[rows[1]] <= order[rows[2]] < order[rows[3]]
 
 
-def test_mixture_by_perplexity_closes_the_loop(spark):
-    """CCNet end-state: the quality buckets feed mixture_sample as
-    domains — weighting only the head keeps exactly the head docs."""
-    from youtube_analytics_lakehouse_databricks_spark.operators.lm_quality import (
-        mixture_by_perplexity,
-        perplexity_buckets,
-    )
-
-    train_df = spark.createDataFrame([(t,) for t in REF], "text string")
-    model = train_ngram_lm(train_df, "text")
-    # 30 docs: 10 in-domain clones (head-ish), 10 shuffled-vocab, 10 gibberish
-    rows = []
-    for i in range(10):
-        rows.append((i, REF[i % 4]))
-        rows.append((100 + i, "cat dog mat rug door the a sat ran slept near on to while and"))
-        rows.append((200 + i, f"zx{i} qv wq jj kk pp zz xx yy vv bb nn mm"))
-    probe = spark.createDataFrame(rows, "doc_id long, text string")
-    buckets = {
-        r["doc_id"]: r["ppl_bucket"]
-        for r in perplexity_buckets(probe, "doc_id", "text", model).collect()
-    }
-    head_ids = {i for i, b in buckets.items() if b == "head"}
-    assert head_ids  # terciles over 30 scored docs: head is non-empty
-    got = {
-        r["doc_id"]
-        for r in mixture_by_perplexity(
-            probe, "doc_id", "text", model, weights={"head": 1.0}, seed=0
-        ).collect()
-    }
-    assert got == head_ids
-
-
 def test_perplexity_buckets_partition_invariant(spark):
     """Bucket cutoffs come from one percentile_approx sketch; at test
     sizes (below the sketch's compression threshold) the quantiles are
@@ -397,40 +365,22 @@ def test_perplexity_buckets_partition_invariant(spark):
 def test_tercile_path_scores_once(spark):
     """The scoring subtree (corpus explode + n hash joins + per-doc agg)
     must execute ONCE in the tercile path: `scored` has two consumers
-    (cutoff collect + output join) and, composed with mixture_sample,
-    `bucketed` has two more — without the lazy lineage cuts the corpus
-    would be re-scored up to four times (r9 VERDICT hygiene item). The
-    cuts truncate lineage, so the RETURNED plan must read checkpoint
-    blocks (ExistingRDD) and contain NONE of the scoring lineage."""
-    from youtube_analytics_lakehouse_databricks_spark.operators.lm_quality import (
-        mixture_by_perplexity,
-        perplexity_buckets,
-    )
+    (cutoff collect + output join) — without the lazy lineage cut the
+    corpus would be re-scored twice (r9 VERDICT hygiene item). The cut
+    truncates lineage, so the RETURNED plan must read checkpoint blocks
+    (ExistingRDD) and contain NONE of the scoring lineage."""
+    from youtube_analytics_lakehouse_databricks_spark.operators.lm_quality import perplexity_buckets
 
     train_df = spark.createDataFrame([(t,) for t in REF], "text string")
     model = train_ngram_lm(train_df, "text")
     rows = [(i, REF[i % 4]) for i in range(12)]
     probe = spark.createDataFrame(rows, "doc_id long, text string")
 
-    def optimized(df) -> str:
-        return df._jdf.queryExecution().optimizedPlan().toString()
-
-    plan = optimized(perplexity_buckets(probe, "doc_id", "text", model))
+    plan = perplexity_buckets(
+        probe, "doc_id", "text", model
+    )._jdf.queryExecution().optimizedPlan().toString()
     # one join only (doc re-attach against the checkpointed scored frame)
     assert plan.count("Join") == 1, plan
     assert "ExistingRDD" in plan or "LogicalRDD" in plan, plan
     # no scoring lineage below the cut: no gram explode, no hash keys
     assert "xxhash64" not in plan and "explode" not in plan.lower(), plan
-
-    plan = optimized(
-        mixture_by_perplexity(
-            probe, "doc_id", "text", model, weights={"head": 1.0}, seed=0
-        )
-    )
-    # everything upstream of the bucketed cut is blocks; the only
-    # remaining corpus work is mixture_sample's own Lehmer draw (its
-    # xxhash64(doc_id, seed) is the sampler, not scoring lineage)
-    assert "LeftOuter" not in plan, plan  # the n scoring joins are gone
-    assert "percentile" not in plan and "explode" not in plan.lower(), plan
-    assert "__h1_" not in plan and "__b1_" not in plan, plan  # no gram keys
-    assert "ExistingRDD" in plan or "LogicalRDD" in plan, plan

@@ -5,14 +5,6 @@ from __future__ import annotations
 from youtube_analytics_lakehouse_databricks_spark.operators import dedup, similarity, text
 
 
-def test_exact_duplicates_clusters(spark):
-    df = spark.createDataFrame(
-        [(1, "aaa"), (2, "bbb"), (3, "aaa"), (4, "aaa")], "id long, body string"
-    )
-    out = {r["keep_id"]: r["dup_count"] for r in dedup.exact_duplicates(df, "body", "id").collect()}
-    assert out == {1: 3, 2: 1}
-
-
 def test_minhash_lsh_finds_near_dups(spark):
     base = "the quick brown fox jumps over the lazy dog again and again today"
     near = base.replace("today", "tonight")
@@ -28,9 +20,9 @@ def test_minhash_lsh_finds_near_dups(spark):
 
 
 def test_shingle_sets_and_array_minhash_match_exploded(spark):
-    """The zero-shuffle array formulations agree exactly with the
-    exploded groupBy ones (min over set == min over multiset); docs
-    shorter than k shingles are absent from both."""
+    """The zero-shuffle shingle-set arrays agree exactly with the
+    exploded shingle rows; docs shorter than k shingles get an empty
+    set."""
     df = spark.createDataFrame(
         [(1, "a b c d c b a b c"), (2, "x y"), (3, "p q r")], "id long, text string"
     )
@@ -43,18 +35,6 @@ def test_shingle_sets_and_array_minhash_match_exploded(spark):
     for i in (1, 3):
         assert set(sets[i]["shset"]) == exploded[i]
         assert sets[i]["n_shingles"] == len(exploded[i])
-
-    sig_agg = {r["id"]: r for r in dedup.minhash_signatures(sh, "id", n_hashes=4).collect()}
-    sig_arr = {
-        r["id"]: r
-        for r in dedup.minhash_from_sets(
-            dedup.shingle_sets(df, "id", "text", k=3), "id", n_hashes=4
-        ).collect()
-    }
-    assert set(sig_agg) == set(sig_arr) == {1, 3}  # doc 2 (< k tokens) in neither
-    for i in (1, 3):
-        for j in range(4):
-            assert sig_agg[i][f"mh{j}"] == sig_arr[i][f"mh{j}"]
 
 
 def test_jaccard_verify_sets_matches_exploded_verify(spark):
@@ -123,7 +103,10 @@ def test_normalize_text_canonicalizes_variants(spark):
         [(1, "Hello,   World!"), (2, "hello world"), (3, "  HELLO?? world  ")],
         "id long, text string",
     )
-    out = {r["id"]: r["norm_text"] for r in text.normalize_text(df, "id", "text").collect()}
+    out = {
+        r["id"]: r["norm_text"]
+        for r in df.select("id", text.norm_expr("text").alias("norm_text")).collect()
+    }
     assert out == {1: "hello world", 2: "hello world", 3: "hello world"}
 
 
@@ -159,11 +142,3 @@ def test_text_operators(spark):
         r["token"]: r["token_count"] for r in text.token_counts(df, "text", min_count=2).collect()
     }
     assert counts["the"] == 2 and counts["und"] == 2 and counts["der"] == 2
-
-    fp = text.positional_fingerprints(df, "id", "text").collect()
-    assert len(fp) == 2 and all(r["fingerprint"] >= 0 for r in fp)
-    # order sensitivity: swapping tokens changes the fingerprint
-    df2 = spark.createDataFrame([(1, "cat the and the hat")], "id long, text string")
-    fp1 = {r["id"]: r["fingerprint"] for r in text.positional_fingerprints(df, "id", "text").collect()}
-    fp2 = {r["id"]: r["fingerprint"] for r in text.positional_fingerprints(df2, "id", "text").collect()}
-    assert fp1[1] != fp2[1]

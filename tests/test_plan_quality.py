@@ -80,26 +80,6 @@ def test_doc_quality_scores_zero_exchange_zero_join(spark):
     assert "EvalPython" not in plan, plan
 
 
-def test_embedding_neardup_has_no_cross_product(spark):
-    """The graded near-dup path must be band-candidate equi-joins + exact
-    verify — never a broadcast theta cross product over all pairs.
-    (Unregistered in r9 — slot freed for substring_dedup_documents — so
-    the builder is imported directly; correctness now lives in
-    tests/test_near_duplicates.py.)"""
-    from youtube_analytics_lakehouse_databricks_spark.queries.vectorops import embedding_near_duplicates
-
-    df = embedding_near_duplicates(spark, SF_DIR)
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_lsh_candidates_no_cross_product_single_band_shuffle(spark):
     """Candidate generation must be the bucket-groupBy shape: no join at
     all (pair expansion is JVM-side over each bucket's id list), so no

@@ -33,7 +33,9 @@ def _run_once(spark, src, out, ckpt):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    if not q.awaitTermination(120):
+        q.stop()
+        pytest.fail("availableNow sessionize query still running after 120 s; stopped it")
     return spark.read.schema(
         "user_id long, session_start timestamp, session_end timestamp, "
         "n_events long, total_value double, closed_by string"
@@ -66,8 +68,8 @@ def no_idle_batches(spark):
 def test_streaming_sessionize_gap_close_one_trigger(
     spark, tmp_path, few_partitions, no_idle_batches
 ):
-    """Fast variant of the slow test below: one availableNow trigger over
-    events straddling SESSION_GAP_US emits the one session the gap closes."""
+    """One availableNow trigger over events straddling SESSION_GAP_US
+    emits the one session the gap closes."""
     src, out, ckpt = tmp_path / "events", tmp_path / "out", tmp_path / "ckpt"
     t0, gap = dt.datetime(2025, 8, 1, 10), dt.timedelta(microseconds=SESSION_GAP_US)
     past_gap = 2 * gap + dt.timedelta(microseconds=1)
@@ -80,11 +82,9 @@ def test_streaming_sessionize_gap_close_one_trigger(
 
 
 @pytest.mark.filterwarnings("ignore")
-# slow: wall-clock-bound on streaming trigger waits (242 s in the r17
-# duration audit — 15% of the whole suite); opt in with -m slow so the
-# default suite fits the driver's test window
-@pytest.mark.slow
-def test_streaming_sessionize_closes_on_gap(spark, tmp_path, few_partitions):
+def test_streaming_sessionize_closes_on_gap(
+    spark, tmp_path, few_partitions, no_idle_batches
+):
     src, out, ckpt = tmp_path / "events", tmp_path / "out", tmp_path / "ckpt"
     src.mkdir()
     out.mkdir()

@@ -19,7 +19,6 @@ def build_graph() -> PipelineGraph:
             "silver",
             (),
             silver.silver_channels,
-            incremental_builder=silver.silver_channels,
             merge_keys=("channel_id",),
         ),
         ViewDef(
@@ -27,7 +26,6 @@ def build_graph() -> PipelineGraph:
             "silver",
             (),
             silver.silver_video_stats_snapshot,
-            incremental_builder=silver.silver_video_stats_snapshot,
             merge_keys=("video_id", "fetched_at_utc"),
             merge_order=("request_id",),
         ),
@@ -51,7 +49,6 @@ def build_graph() -> PipelineGraph:
             (),
             silver.fact_video_daily_metrics,
             partition_by=("date",),
-            incremental_builder=silver.fact_video_daily_metrics,
             merge_keys=("video_id", "date"),
         ),
         ViewDef(
@@ -60,7 +57,6 @@ def build_graph() -> PipelineGraph:
             (),
             silver.fact_video_traffic_source_metrics,
             partition_by=("date",),
-            incremental_builder=silver.fact_video_traffic_source_metrics,
             merge_keys=("video_id", "date", "source_id"),
         ),
         ViewDef(
@@ -69,7 +65,6 @@ def build_graph() -> PipelineGraph:
             (),
             silver.fact_video_country_metrics,
             partition_by=("date",),
-            incremental_builder=silver.fact_video_country_metrics,
             merge_keys=("video_id", "date", "country_code"),
         ),
         ViewDef(
@@ -78,7 +73,6 @@ def build_graph() -> PipelineGraph:
             (),
             silver.fact_video_device_metrics,
             partition_by=("date",),
-            incremental_builder=silver.fact_video_device_metrics,
             merge_keys=("video_id", "date", "device_type"),
         ),
         ViewDef("dim_traffic_source", "silver", (), silver.dim_traffic_source),

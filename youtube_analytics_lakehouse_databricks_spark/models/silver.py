@@ -42,35 +42,9 @@ def _recency_order() -> list[Column]:
 # snapshot_dates up to this many days older than their ingest time (the
 # reference re-ingests a rolling lookback window, default 7 days —
 # ingest_analytics_api_to_bronze.py:46; 30 gives ample slack for backfills).
-# Configurable via set_backfill_lookback_days: it must be >= the source's
-# actual re-ingest window or incremental refresh silently diverges from a
-# full recompute (audit with excluded_backfill_count).
+# It must be >= the source's actual re-ingest window or incremental refresh
+# silently diverges from a full recompute.
 BACKFILL_LOOKBACK_DAYS = 30
-
-
-def set_backfill_lookback_days(days: int) -> None:
-    """Widen/narrow the incremental partition-prune margin to match the
-    upstream source's re-ingest window."""
-    global BACKFILL_LOOKBACK_DAYS
-    if days < 0:
-        raise ValueError("lookback must be >= 0")
-    BACKFILL_LOOKBACK_DAYS = days
-
-
-def excluded_backfill_count(spark: SparkSession, table: str, since) -> int:
-    """Audit: envelopes newer than the watermark whose snapshot_date falls
-    OUTSIDE the lookback prune — i.e. rows an incremental refresh would
-    silently skip but a full recompute would include. Non-zero means the
-    lookback must be widened (run out-of-band, not in the refresh path)."""
-    since_date = since.date() if hasattr(since, "date") else since
-    return (
-        spark.table(table)
-        .filter(
-            (F.col("ingest_ts_utc") > F.lit(since))
-            & (F.col("snapshot_date") < F.date_sub(F.lit(since_date), BACKFILL_LOOKBACK_DAYS))
-        )
-        .count()
-    )
 
 
 def _bronze(spark: SparkSession, table: str, since=None) -> DataFrame:

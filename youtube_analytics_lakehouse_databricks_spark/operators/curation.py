@@ -30,7 +30,7 @@ the corpus the next (more expensive) stage sees:
                        paraphrase/translation leakage no k-gram rule
                        sees;
 2. exact dedup       — canonical-text hash groupBy (cosmetic variants
-                       collide via normalize_text); one narrow shuffle;
+                       collide via text.norm_expr); one narrow shuffle;
 3. near-dup dedup    — MinHash signatures -> LSH band candidates (hot
                        buckets capped) -> candidate-restricted Jaccard
                        verify -> connected components -> min-id keeper
@@ -79,11 +79,11 @@ Perf note (measured, round 5, sf0.1 local[32]): signatures INTENTIONALLY
 come from the codegen'd explode+min-agg path (dedup.minhash_signatures
 over dedup.shingles) and the Jaccard sets from the independent per-row
 array build (dedup.shingle_sets), even though that tokenizes+shingles the
-survivors twice. The single-pass alternative — minhash_from_sets over the
-already-built sets — removes one aggregation but pays interpreted
-higher-order-function evaluation for every sha2 (HOF lambdas don't enter
-whole-stage codegen): 5.5 s vs 1.4 s for the full candidate chain at
-sf0.1. The duplicate shingling is narrow per-row JVM work that
+survivors twice. The single-pass alternative — a per-row array_min over
+seeded sha2 digests of the already-built sets — removes one aggregation
+but pays interpreted higher-order-function evaluation for every sha2 (HOF
+lambdas don't enter whole-stage codegen): 5.5 s vs 1.4 s for the full
+candidate chain at sf0.1. The duplicate shingling is narrow per-row JVM work that
 parallelizes perfectly; the interpreted crypto does not.
 """
 

@@ -1,14 +1,14 @@
 """Deduplication operators over arbitrary DataFrames.
 
-Five families, all expressed as compositions of built-in DataFrame ops
+Four families, all expressed as compositions of built-in DataFrame ops
 (shuffle-on-derived-key; no O(n^2) stages):
 
-- exact: content-hash groupBy;
 - MinHash + LSH: shingle -> per-seed min sha256 -> band keys -> equi-join
   candidates;
 - n-gram Jaccard: distinct-shingle self-join (brute verify) or candidate-
   restricted verify (the scale path);
-- SimHash: sign-of-sum bit fingerprints.
+- paragraph dedup: exact canonical-paragraph hashes, first occurrence kept;
+- substring dedup: repeated token windows removed (the suffix-array rule).
 
 Hashes are sha256 hex (lexicographic min is a valid uniform min-hash);
 everything is deterministic and engine-portable.
@@ -20,13 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from youtube_analytics_lakehouse_databricks_spark.operators.text import norm_expr
-
-
-def exact_duplicates(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
-    """One row per distinct content hash: (hash, keep id, cluster size)."""
-    return df.groupBy(F.sha2(F.col(content_col), 256).alias(f"{content_col}_hash")).agg(
-        F.min(id_col).alias(f"keep_{id_col}"), F.count(F.lit(1)).alias("dup_count")
-    )
 
 
 def _tokenized(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -79,35 +72,6 @@ def shingle_sets(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataF
 
 
 SLICES_PER_DIGEST = 4  # four 16-hex-char (64-bit) minhashes per sha256
-
-
-def minhash_from_sets(ds: DataFrame, id_col: str, n_hashes: int = 8, set_col: str = "shset") -> DataFrame:
-    """MinHash signature columns mh0..mhN-1 computed per row from the
-    shingle-set array, using the sliced-digest derivation (see
-    minhash_signatures): one seeded digest array per 4 hashes, then
-    array_min over each 16-hex-char slice. min over the distinct set ==
-    min over the multiset, so signatures are identical to the exploded
-    groupBy formulation — with NO shuffle at all (each doc row is
-    independent). Docs with an empty set are dropped, matching the
-    groupBy shape (no shingle rows -> no signature row). The digest
-    arrays are separate bound projections referenced 4x each, so
-    CollapseProject keeps the barrier and sha2 runs once per seed."""
-    out = ds.filter(F.size(set_col) > 0)
-    n_seeds = -(-n_hashes // SLICES_PER_DIGEST)
-    for seed in range(n_seeds):
-        out = out.withColumn(
-            f"__dg{seed}",
-            F.expr(f"transform({set_col}, x -> sha2(concat('{seed}', '|', x), 256))"),
-        )
-    cols = []
-    for i in range(n_hashes):
-        seed, sl = divmod(i, SLICES_PER_DIGEST)
-        cols.append(
-            F.expr(
-                f"array_min(transform(__dg{seed}, d -> substring(d, {1 + 16 * sl}, 16)))"
-            ).alias(f"mh{i}")
-        )
-    return out.select(id_col, *cols)
 
 
 def jaccard_verify_sets(

@@ -444,53 +444,3 @@ def perplexity_buckets(
     return df.join(
         scored.select(id_col, "scored", "perplexity"), id_col
     ).select(*df.columns, bucket.alias("ppl_bucket"))
-
-
-def mixture_by_perplexity(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    model: NgramLM,
-    *,
-    weights: dict[str, float] | None = None,
-    alpha: float | None = None,
-    n_buckets: int = 3,
-    target_rows: int | None = None,
-    seed: int = 0,
-    allow_upsample: bool = False,
-    durable: bool = False,
-) -> DataFrame:
-    """The CCNet end-state in one call: bucket the corpus by perplexity
-    quantile against the reference LM and feed the buckets to
-    mixture_sample as domains — e.g. ``weights={'head': 3, 'middle': 2,
-    'tail': 1}`` oversamples reference-like text. Weights naming only a
-    subset of buckets DROP the others (mixture_sample's explicit-weights
-    contract); NULL-bucket (unscorable) docs are dropped under explicit
-    weights unless None is given a weight via ``alpha`` mode instead.
-    Output: input columns + ppl_bucket + copy.
-
-    ``bucketed`` is consumed twice inside mixture_sample (the per-domain
-    rate aggregation + the output draw), so it gets the same lazy
-    lineage cut as ``scored`` in perplexity_buckets — together they pin
-    the composed path to ONE scoring pass + ONE bucketize join, instead
-    of re-deriving the scoring lineage up to four times.
-    """
-    from youtube_analytics_lakehouse_databricks_spark.operators.lineage import cut
-    from youtube_analytics_lakehouse_databricks_spark.operators.mixing import mixture_sample
-
-    bucketed = cut(
-        perplexity_buckets(
-            df, id_col, text_col, model, n_buckets=n_buckets, durable=durable
-        ),
-        durable=durable,
-    )
-    return mixture_sample(
-        bucketed,
-        "ppl_bucket",
-        id_col,
-        alpha=alpha,
-        weights=weights,
-        target_rows=target_rows,
-        seed=seed,
-        allow_upsample=allow_upsample,
-    )

@@ -322,45 +322,6 @@ def ivf_topk(
     )
 
 
-def band_near_duplicates(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    band_exprs: list[str],
-    dot_expr: str,
-    norm_expr: str,
-    threshold: float,
-) -> DataFrame:
-    """Near-duplicate pairs via SRP-band candidates + exact cosine verify.
-
-    ``band_exprs`` are SQL expressions producing one bucket key per band
-    (deterministic, engine-portable so an oracle can reproduce the exact
-    candidate set). Candidate retrieval is a single equi-join on
-    (band_idx, band_key) over the posexploded band array — the MinHash-LSH
-    shape; the exact fold-based cosine runs ONLY on candidates. No cross
-    product at any scale.
-    """
-    from youtube_analytics_lakehouse_databricks_spark.operators.dedup import band_join_candidates
-
-    banded = df.select(id_col, *[F.expr(e).alias(f"band{i}") for i, e in enumerate(band_exprs)])
-    cand = band_join_candidates(banded, id_col, [f"band{i}" for i in range(len(band_exprs))])
-    normed = df.select(id_col, vec_col, F.expr(norm_expr.format(a=vec_col)).alias("norm"))
-    a = normed.select(
-        F.col(id_col).alias("vec_a"), F.col(vec_col).alias("emb_a"), F.col("norm").alias("norm_a")
-    )
-    b = normed.select(
-        F.col(id_col).alias("vec_b"), F.col(vec_col).alias("emb_b"), F.col("norm").alias("norm_b")
-    )
-    dot = F.expr(dot_expr.format(a="emb_a", b="emb_b"))
-    return (
-        cand.selectExpr("doc_a AS vec_a", "doc_b AS vec_b")
-        .join(a, "vec_a")
-        .join(b, "vec_b")
-        .select("vec_a", "vec_b", F.round(dot / (F.col("norm_a") * F.col("norm_b")), 6).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
 def auto_n_cells(n_rows: int, max_cluster_size: int, floor: int = 16) -> int:
     """Cell count so the EXPECTED cluster size stays at half the pairwise
     cap: ceil(2 * n / cap), floored at ``floor`` so small corpora still

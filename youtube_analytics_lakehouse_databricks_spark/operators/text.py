@@ -42,13 +42,6 @@ def norm_expr(text_col):
     return F.trim(F.regexp_replace(F.lower(col), "[^a-z0-9]+", " "))
 
 
-def normalize_text(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, norm_text): canonical text for hashing/dedup — one narrow
-    projection, no shuffle; run BEFORE exact/MinHash dedup so cosmetic
-    variants collide."""
-    return df.select(id_col, norm_expr(text_col).alias("norm_text"))
-
-
 def quality_scores(
     df: DataFrame,
     id_col: str,
@@ -117,18 +110,6 @@ def lang_id(
         pred = F.when(cond, lang) if pred is None else pred.when(cond, lang)
     pred = pred.otherwise("unknown")
     return counts.select(id_col, pred.alias("predicted_lang"))
-
-
-def positional_fingerprints(df: DataFrame, id_col: str, text_col: str, modulus: int = 1_000_000_007) -> DataFrame:
-    """Order-sensitive but distribution-safe document fingerprint:
-    exact bigint sum of position-weighted token hashes, mod m."""
-    toks = df.select(
-        id_col, F.posexplode(_tokens(text_col)).alias("ord", "token")
-    )
-    term = (F.col("ord") + 1).cast("long") * (
-        F.ascii("token").cast("long") * 31 + F.length("token").cast("long")
-    )
-    return toks.groupBy(id_col).agg((F.sum(term) % modulus).cast("long").alias("fingerprint"))
 
 
 def token_counts(df: DataFrame, text_col: str, pattern: str | None = None, min_count: int = 1) -> DataFrame:

@@ -28,13 +28,13 @@ class ViewDef:
     name: str  # unqualified table name, e.g. "silver_channels"
     schema: str  # target schema: "silver" | "gold"
     deps: tuple[str, ...]  # names of other ViewDefs this one reads
-    builder: Callable[[SparkSession], DataFrame]
+    builder: Callable[..., DataFrame]
     partition_by: tuple[str, ...] = ()
-    # Incremental refresh support (latest-wins views only): a builder that
-    # accepts a `since` watermark and the business keys to merge on. Views
-    # without merge support always fully recompute (e.g. SCD2, dims, date
-    # spine, gold marts — correct and cheap relative to the facts).
-    incremental_builder: Callable[[SparkSession, object], DataFrame] | None = None
+    # Incremental refresh support (latest-wins views only): the business
+    # keys to merge on. A view with merge keys is mergeable, and its
+    # builder also accepts a `since` watermark: builder(spark, since).
+    # Views without merge keys always fully recompute (e.g. SCD2, dims,
+    # date spine, gold marts — correct and cheap relative to the facts).
     merge_keys: tuple[str, ...] = ()
     merge_order: tuple[str, ...] = ("snapshot_date", "ingest_ts_utc", "request_id")
     # Escape hatch for views whose incremental logic isn't a latest-wins
@@ -119,19 +119,14 @@ class PipelineGraph:
         def _one(view: ViewDef) -> tuple[str, str]:
             if view.custom_incremental is not None:
                 return view.fqn, view.custom_incremental(spark)
-            can_merge = (
-                view.incremental_builder is not None
-                and view.merge_keys
-                and spark.catalog.tableExists(view.fqn)
-            )
-            if not can_merge:
+            if not (view.merge_keys and spark.catalog.tableExists(view.fqn)):
                 storage.write_table(view.builder(spark), view.fqn, "overwrite", view.partition_by)
-                if view.incremental_builder is not None:
+                if view.merge_keys:
                     set_watermark(spark, view.fqn, _max_ingest(spark.table(view.fqn)))
                     return view.fqn, "bootstrap"
                 return view.fqn, "full"
             since = get_watermark(spark, view.fqn)
-            delta = view.incremental_builder(spark, since)
+            delta = view.builder(spark, since)
             if delta.limit(1).count() == 0:
                 return view.fqn, "noop"
             # Latest-wins upsert: on Delta this is a keyed MERGE touching

@@ -175,37 +175,6 @@ def event_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# NOTE: formerly registered as the oracled query "signup_followup_window";
-# unregistered in round 10 to free the 50-row-budget slot ngram_lm_scores
-# now occupies (queries/textops.py). Its operator surface — the interval
-# (range) join, equi key + range predicate + per-anchor aggregate — stays
-# fully oracled through asof_purchase_prior_click, which runs the
-# IDENTICAL join shape on a purchase anchor ([ts-1h, ts) window) inside
-# its green row. Kept importable; timing series continues in bench.py.
-def signup_followup_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = read(spark, sf_dir, "events")
-    signups = ev.filter(F.col("event_type") == "signup").select(
-        "user_id", F.col("event_id").alias("signup_id"), F.col("ts").alias("signup_ts")
-    )
-    followups = ev.select(
-        F.col("user_id").alias("f_user_id"),
-        F.col("ts").alias("f_ts"),
-        F.col("event_type").alias("f_type"),
-    )
-    joined = signups.join(
-        followups,
-        on=(F.col("f_user_id") == F.col("user_id"))
-        & (F.col("f_ts") > F.col("signup_ts"))
-        & (F.col("f_ts") <= F.expr("signup_ts + INTERVAL 1 HOUR")),
-    )
-    return joined.groupBy("signup_id", "user_id").agg(
-        F.count(F.lit(1)).alias("n_followups"),
-        F.sum(F.when(F.col("f_type") == "purchase", 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_purchases"),
-    )
-
-
 @register(
     "supplier_balance_ranks",
     """
@@ -272,25 +241,6 @@ def cumulative_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "order_date",
         "daily_total",
         (F.sum("day_units").over(w).cast("double") / 10000.0).alias("cumulative_total"),
-    )
-
-
-# NOTE: "value_percentiles" (oracled through r11) was folded into
-# events_rollup — the exact interpolated percentiles (Spark percentile ==
-# DuckDB quantile_cont) now ride every rollup grain of that row, a
-# strictly larger surface than the event_type-only grain here; slot freed
-# for embedding_pca_project. The standalone builder stays importable.
-def value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = read(spark, sf_dir, "events")
-    return (
-        ev.groupBy("event_type")
-        .agg(F.expr("percentile(value, array(0.5D, 0.9D, 0.99D))").alias("q"))
-        .select(
-            "event_type",
-            F.round(F.element_at("q", 1), 6).alias("p50"),
-            F.round(F.element_at("q", 2), 6).alias("p90"),
-            F.round(F.element_at("q", 3), 6).alias("p99"),
-        )
     )
 
 

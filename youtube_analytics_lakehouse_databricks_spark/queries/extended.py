@@ -248,8 +248,7 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distribution too); digest materialized once per token, the 16 bit
     # aggs only slice nibbles from it. The positional fingerprint rides
     # the SAME explode + exchange as a 17th aggregate — two fingerprint
-    # families for one pass (operators/text.py::positional_fingerprints
-    # is the standalone operator form).
+    # families for one pass.
     docs = read_fanned(spark, sf_dir, "documents", by="doc_id")
     toks = docs.select(
         "doc_id",

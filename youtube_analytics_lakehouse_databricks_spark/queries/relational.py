@@ -593,22 +593,6 @@ def conditional_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# NOTE: "timestamp_parse_roundtrip" (oracled through r11) was folded into
-# conditional_metrics — the to_timestamp(date_format(...)) microsecond
-# round-trip and to_date cast now ride that row at the same per-event
-# grain and full timestamp fidelity, freeing a 50-row-budget slot for
-# classifier_training_scores. The standalone builder stays importable.
-def timestamp_parse_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = read(spark, sf_dir, "events")
-    fmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-    return ev.select(
-        "event_id",
-        "ts",
-        F.to_timestamp(F.date_format("ts", fmt), fmt).alias("ts_roundtrip"),
-        F.to_date("ts").alias("ts_date"),
-    )
-
-
 # NOTE: formerly registered as the oracled query "latest_purchasing_user"
 # (O3: top-1 by COALESCE-ordered recency, the
 # post_deploy_smoke_checks.py:240-245 latest-run-status idiom);

@@ -90,10 +90,11 @@ def minhash_signature_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per mh column.
 
     Re-measured head-to-head in round 5 (sf0.1, local[32], min of 3,
-    full lsh_candidates chain): this path 1.43 s vs minhash_from_sets
-    5.46 s — the "one less shuffle" of the from-sets variant is a real
-    exchange saved but the interpreted sha2-in-transform costs 4x more
-    than the shuffle it avoids, and the doc_id fan-out already doubles
+    full lsh_candidates chain): this path 1.43 s vs a per-row
+    array_min over the shingle-set arrays 5.46 s — the "one less
+    shuffle" of the from-sets variant is a real exchange saved but the
+    interpreted sha2-in-transform costs 4x more than the shuffle it
+    avoids, and the doc_id fan-out already doubles
     as the agg's distribution (the agg exchange is elided; the plan
     test pins 3 exchanges total). Keep the agg formulation."""
     return dedup_ops.minhash_signatures(shingles(spark, sf_dir), "doc_id", N_MINHASH)
@@ -176,24 +177,6 @@ def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# NOTE: formerly registered as the oracled query "ngram_jaccard_pairs";
-# unregistered in round 10 to free the 50-row-budget slot
-# semantic_dedup_embeddings now occupies (queries/vectorops.py). The
-# Jaccard-verify operator it exercised stays fully oracled through
-# lsh_verified_near_dups, which re-verifies candidate Jaccard with the
-# same shingle sets, intersection counts, and >= 0.5 threshold (its
-# oracle computes the identical inter/union arithmetic) — the only
-# surface this row added was the BRUTE all-pairs candidate generation,
-# which is the documented anti-pattern at 100 TB, not a production path.
-# Kept importable for bench (timing series continues in bench.py).
-def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Measured note: deriving the legs from per-doc set ARRAYS (explode
-    # of array_distinct) is ~2x slower here despite fewer shuffles — the
-    # interpreted transform() lambda dominates; the codegen'd explode +
-    # one distinct shuffle per leg wins. Keep the multiset formulation.
-    return dedup_ops.jaccard_verify(shingles(spark, sf_dir), "doc_id", threshold=0.5)
-
-
 def _lsh_verified_sql() -> str:
     sig = _minhash_sql_cols()
     bands = N_MINHASH // 2
@@ -251,27 +234,6 @@ def lsh_verified_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = minhash_signature_df(spark, sf_dir)
     cand = dedup_ops.lsh_candidates(sig, "doc_id", N_MINHASH, rows_per_band=2)
     return dedup_ops.jaccard_verify_sets(sets, "doc_id", cand, threshold=0.5)
-
-
-def _neardup_components_sql() -> str:
-    """Recursive-CTE oracle: component = MIN doc id reachable over the
-    verified near-dup pairs (the same pairs as lsh_verified_near_dups)."""
-    return f"""
-    WITH RECURSIVE pairs AS ({_lsh_verified_sql()}),
-    nodes AS (
-      SELECT doc_a AS node FROM pairs UNION SELECT doc_b FROM pairs
-    ),
-    edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM pairs
-      UNION SELECT doc_b, doc_a FROM pairs
-    ),
-    reach(node, r) AS (
-      SELECT node, node FROM nodes
-      UNION
-      SELECT e.a, reach.r FROM reach JOIN edges e ON e.b = reach.node
-    )
-    SELECT node AS doc_id, MIN(r) AS component FROM reach GROUP BY node
-    """
 
 
 # NOTE: formerly registered as the oracled query "neardup_components";
@@ -534,8 +496,7 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # doc_fingerprints merged into simhash_fingerprints (extended.py, r8):
 # both per-doc fingerprints now ride ONE explode + ONE aggregation, and
-# the freed registry slot carries mixture_sample_domains below. The
-# standalone operator remains operators/text.py::positional_fingerprints.
+# the freed registry slot carries mixture_sample_domains below.
 
 
 @register(

@@ -25,23 +25,10 @@ from youtube_analytics_lakehouse_databricks_spark.queries import read, register
 TOP_K = 5
 N_PLANES = 8
 
-# Left-to-right fold for the dot product: deterministic double arithmetic.
-_DOT = "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-_NORM = "sqrt(aggregate({a}, CAST(0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-
-# DuckDB equivalents with the same fold order.
+# DuckDB dot product and norm as left-to-right folds: deterministic double
+# arithmetic in the oracle.
 _DOT_DD = "list_reduce(list_prepend(0.0, list_transform(list_zip({a}, {b}), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))), (acc, v) -> acc + v)"
 _NORM_DD = "sqrt(list_reduce(list_prepend(0.0, list_transform({a}, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))), (acc, v) -> acc + v))"
-
-
-def _normed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = read(spark, sf_dir, "embeddings")
-    return emb.select(
-        "vec_id",
-        "label",
-        "embedding",
-        F.expr(_NORM.format(a="embedding")).alias("norm"),
-    )
 
 
 def _embedding_hints(sf_dir: str) -> tuple[int | None, int | None]:
@@ -101,26 +88,11 @@ def embedding_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _plane_weight_sql(engine: str, plane: int) -> str:
-    """Deterministic ±1 weight per (plane, dim): parity of the first hex
-    nibble of sha256('<plane>|<dim>'). dim is the 1-based array position.
-    DuckDB-only since r11 (the oracle-side derivation; the Spark side
-    computes the same weights in numpy via srp_plane_matrix)."""
-    if engine != "duckdb":
-        raise ValueError("only the duckdb derivation remains; see docstring")
-    h = f"sha256(concat_ws('|', '{plane}', CAST(i AS VARCHAR)))"
-    # first hex char -> 0..15 -> parity -> +/-1
-    return f"CASE WHEN strpos('13579bdf', substr({h}, 1, 1)) > 0 THEN 1.0 ELSE -1.0 END"
-
-
-def plane_matrix(n_planes: int, dim: int):
-    from youtube_analytics_lakehouse_databricks_spark.operators.similarity import srp_plane_matrix
-
-    return srp_plane_matrix(n_planes, dim)
-
-
 def _srp_bits_duckdb(plane: int) -> str:
-    w = _plane_weight_sql("duckdb", plane)
+    """Sign bit of the projection on ``plane``. The ±1 weight per (plane,
+    dim) is the parity of the first hex nibble of sha256('<plane>|<dim>'),
+    dim the 1-based array position — the oracle-side derivation of the
+    weights the Spark side computes in numpy via srp_plane_matrix."""
     proj = (
         "list_reduce(list_prepend(0.0, list_transform("
         "list_zip(embedding, range(1, len(embedding) + 1)), "
@@ -128,107 +100,6 @@ def _srp_bits_duckdb(plane: int) -> str:
         ")), (acc, v) -> acc + v)"
     )
     return f"CASE WHEN {proj} >= 0 THEN '1' ELSE '0' END"
-
-
-NEARDUP_BANDS = 4
-NEARDUP_PLANES_PER_BAND = 8
-NEARDUP_THRESHOLD = 0.99
-
-
-_MAX_DIM = 512  # literal weight arrays sliced to the actual vector size
-
-
-def _band_expr_spark(band: int) -> str:
-    """Band key as JVM-side float math over LITERAL ±1 weight arrays.
-
-    The weights are the same sha256('<plane>|<i>')-derived values the
-    oracle computes in SQL, but materialized once in Python instead of
-    5M sha2 calls per scan; fold order (left-to-right aggregate) matches
-    the oracle exactly, so the sign bits are identical.
-    """
-    from youtube_analytics_lakehouse_databricks_spark.operators.similarity import srp_plane_matrix
-
-    planes = srp_plane_matrix((band + 1) * NEARDUP_PLANES_PER_BAND, _MAX_DIM)
-    bits = []
-    for r in range(NEARDUP_PLANES_PER_BAND):
-        w = planes[band * NEARDUP_PLANES_PER_BAND + r]
-        lit = "array(" + ", ".join(f"{v:.1f}D" for v in w) + ")"
-        proj = (
-            f"aggregate(zip_with(embedding, slice({lit}, 1, size(embedding)), "
-            "(x, w) -> CAST(x AS DOUBLE) * w), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-        bits.append(f"CASE WHEN {proj} >= 0 THEN '1' ELSE '0' END")
-    return "concat(" + ", ".join(bits) + ")"
-
-
-def _band_expr_duckdb(band: int) -> str:
-    bits = [
-        _srp_bits_duckdb(band * NEARDUP_PLANES_PER_BAND + r)
-        for r in range(NEARDUP_PLANES_PER_BAND)
-    ]
-    return " || ".join(bits)
-
-
-def _neardup_oracle_sql() -> str:
-    band_cols = ",\n             ".join(
-        f"{_band_expr_duckdb(b)} AS band{b}" for b in range(NEARDUP_BANDS)
-    )
-    ex_union = "\n      UNION ALL ".join(
-        f"SELECT vec_id, {b} AS band_idx, band{b} AS band_key FROM banded"
-        for b in range(NEARDUP_BANDS)
-    )
-    dot = _DOT_DD.format(a="na.embedding", b="nb.embedding")
-    return f"""
-    WITH normed AS (
-      SELECT vec_id, embedding, {_NORM_DD.format(a="embedding")} AS norm
-      FROM embeddings
-    ), banded AS (
-      SELECT vec_id,
-             {band_cols}
-      FROM embeddings
-    ), ex AS (
-      {ex_union}
-    ), cand AS (
-      SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-      FROM ex a JOIN ex b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.vec_id < b.vec_id
-    )
-    SELECT c.vec_a, c.vec_b,
-           round({dot} / (na.norm * nb.norm), 6) AS cosine
-    FROM cand c
-    JOIN normed na ON na.vec_id = c.vec_a
-    JOIN normed nb ON nb.vec_id = c.vec_b
-    WHERE round({dot} / (na.norm * nb.norm), 6) >= {NEARDUP_THRESHOLD}
-    """
-
-
-# NOTE: formerly registered as the oracled query "embedding_near_duplicates";
-# unregistered in round 9 to free the 50-row-budget slot
-# substring_dedup_documents now occupies. Its oracle row was VACUOUS at the
-# driver sf (the synthetic embeddings contain no cosine>=0.99 pairs, so the
-# check matched 0 rows against 0 rows); correctness is now pinned by a
-# stronger test — tests/test_near_duplicates.py compares the SRP-band path
-# against a brute-force all-pairs reference on a corpus WITH planted
-# near-duplicates. The candidate-join machinery stays oracled through
-# embedding_bucket_ann (identical band_join shape). _neardup_oracle_sql()
-# is kept importable so the test can cross-check the DuckDB mirror too.
-def embedding_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SRP-LSH band candidates (4 bands x 8 planes, one equi-join on
-    (band_idx, band_key)) + exact fold-cosine verify on candidates ONLY —
-    never an all-pairs product. At threshold 0.99 a pair is missed only if
-    every one of the 4 bands splits it (P < 1e-2 per the SRP collision
-    bound, near 0 for the near-identical vectors the threshold targets)."""
-    from youtube_analytics_lakehouse_databricks_spark.operators.similarity import band_near_duplicates
-
-    return band_near_duplicates(
-        read(spark, sf_dir, "embeddings"),
-        "vec_id",
-        "embedding",
-        [_band_expr_spark(b) for b in range(NEARDUP_BANDS)],
-        _DOT,
-        _NORM,
-        threshold=NEARDUP_THRESHOLD,
-    )
 
 
 # NOTE: "embedding_lsh_buckets" (oracled through r5) was consolidated
@@ -258,9 +129,8 @@ def embedding_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # regime embedding_topk_cosine's green oracle row established.
 #
 # Registered parameters: the synthetic embeddings are random vectors with
-# NO planted near-duplicates (max within-cluster cosine ~0.51 at sf0.01 —
-# the reason embedding_near_duplicates' 0.99-threshold row was vacuous and
-# was unregistered in r9), so the registered row runs at threshold 0.4 to
+# NO planted near-duplicates (max within-cluster cosine ~0.51 at sf0.01, so
+# a 0.99 threshold would match nothing), so the registered row runs at threshold 0.4 to
 # make the grouping/keeper machinery non-vacuous: at sf0.01 it yields 16
 # verified edges, 14 multi-member groups (one 4-member chain), 16 drops,
 # and 2 over-cap clusters (75 flagged rows) under max_cluster_size=36 —
@@ -269,9 +139,9 @@ def embedding_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SEMDEDUP_N_CELLS = 16
 SEMDEDUP_ITERS = 3
-SEMDEDUP_SAMPLE = 2048  # max(n_cells * 64, 2048) for n_cells = 16
 SEMDEDUP_THRESHOLD = 0.4
 SEMDEDUP_CAP = 36
+_MAX_DIM = 512  # bound of the per-dimension range lateral in the mirror
 
 # Folds over already-float64 lists (normalized vectors / mean vectors).
 _DOT_D_DD = "list_reduce(list_prepend(0.0, list_transform(list_zip({a}, {b}), p -> p[1] * p[2])), (acc, v) -> acc + v)"

@@ -62,10 +62,11 @@ def get_spark(
         # 24g, NOT the machine's 128g: in local mode all executor threads
         # share the driver JVM heap, and an oversized heap lets G1's
         # young generation balloon between collections — measured on the
-        # allocation-heavy shingle self-join (ngram_jaccard_pairs,
-        # sf0.1): with a 90g heap, identical back-to-back runs swung
-        # 1.8-10.4 s wall with 2-22 s of GC, and never converged; at
-        # 16-24g the same runs settle at 1.2-1.7 s with bounded GC. Big
+        # allocation-heavy shingle self-join (the since-deleted
+        # ngram_jaccard_pairs row, sf0.1): with a 90g heap, identical
+        # back-to-back runs swung 1.8-10.4 s wall with 2-22 s of GC, and
+        # never converged; at 16-24g the same runs settle at 1.2-1.7 s
+        # with bounded GC. Big
         # per-node datasets spill via MEMORY_AND_DISK instead of growing
         # the heap, which is also the right cluster posture (real
         # executors run 4-8g per 4-8 cores). Override with
@@ -100,8 +101,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Read the driver's parquet tables and return DataFrames in order."""
-    return [spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names]

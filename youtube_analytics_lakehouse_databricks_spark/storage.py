@@ -28,11 +28,6 @@ def delta_available() -> bool:
 
 TABLE_FORMAT = "delta" if delta_available() else "parquet"
 
-# Hive-style bucketing (bucketBy + saveAsTable) is a parquet/ORC feature;
-# Delta OSS rejects bucketed writes (it co-locates via OPTIMIZE ZORDER
-# instead), so bucketed layouts always persist as parquet.
-BUCKET_FORMAT = "parquet"
-
 
 def write_table(
     df: DataFrame,
