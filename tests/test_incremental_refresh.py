@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from youtube_analytics_lakehouse_databricks_spark import contract
 from youtube_analytics_lakehouse_databricks_spark.models.pipeline import build_graph
 from youtube_analytics_lakehouse_databricks_spark.plans.registry import ensure_schemas
 from youtube_analytics_lakehouse_databricks_spark.sources.envelope import ingest
@@ -31,8 +32,16 @@ def test_incremental_equals_full(spark):
     graph = build_graph()
     ctxs = run_contexts(3)
 
-    # isolate from tables earlier tests may have left behind
-    for fqn in [*MERGE_VIEWS, "ops.refresh_watermarks"]:
+    # isolate from tables earlier tests may have left behind: with bronze
+    # already holding generations 2-3, the bootstrap would cover them and
+    # the merge below would find nothing new
+    for fqn in [
+        *MERGE_VIEWS,
+        "ops.refresh_watermarks",
+        *(f"bronze.{t}" for t in contract.BRONZE_TABLES),
+        "silver.video_metadata_typed",
+        "silver.silver_video_metadata_scd2",
+    ]:
         spark.sql(f"DROP TABLE IF EXISTS {fqn}")
 
     # bootstrap on generation 1
@@ -87,8 +96,6 @@ def test_backfill_of_older_snapshot_is_merged(spark):
     import datetime as dt
 
     from youtube_analytics_lakehouse_databricks_spark.sources.envelope import RunContext
-
-    from youtube_analytics_lakehouse_databricks_spark import contract
 
     ensure_schemas(spark)
     graph = build_graph()

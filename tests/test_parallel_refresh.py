@@ -1,6 +1,6 @@
-"""Concurrent same-depth MV refresh: dependency barriers hold and the
-result is identical to a sequential refresh (dbt threads:4 parity —
-reference dbt/profiles.yml:12)."""
+"""Concurrent MV refresh: dependency barriers hold, a ready view does not
+wait for an unrelated sibling, and the result is identical to a
+sequential refresh (dbt threads:4 parity — reference dbt/profiles.yml:12)."""
 
 from __future__ import annotations
 
@@ -58,3 +58,41 @@ def test_scoped_refresh_pulls_upstream_only(spark):
     g.register(ViewDef("sc_other", "silver", (), lambda s: s.range(2)))
     refreshed = g.refresh(spark, only={"sc_b"})
     assert refreshed == ["silver.sc_a", "silver.sc_b"]
+
+
+def test_ready_view_does_not_wait_for_unrelated_slow_sibling(spark):
+    """A view whose only dependency is written starts while an unrelated
+    sibling of that dependency is still building."""
+    ensure_schemas(spark, ("silver",))
+    dependent_started = threading.Event()
+    waited = {}
+
+    def slow(s):
+        # returns once the dependent view has started (or after 60 s)
+        waited["ok"] = dependent_started.wait(timeout=60)
+        return s.range(1)
+
+    def dependent(s):
+        dependent_started.set()
+        return s.table("silver.rdy_fast")
+
+    g = PipelineGraph()
+    g.register(ViewDef("rdy_slow", "silver", (), slow))
+    g.register(ViewDef("rdy_fast", "silver", (), lambda s: s.range(2)))
+    g.register(ViewDef("rdy_dep", "silver", ("rdy_fast",), dependent))
+    refreshed = g.refresh(spark)
+
+    assert waited["ok"], "rdy_dep waited for rdy_slow"
+    assert refreshed == ["silver.rdy_slow", "silver.rdy_fast", "silver.rdy_dep"]
+    assert spark.table("silver.rdy_dep").count() == 2
+
+
+def test_tasks_run_after_the_views_they_read(spark):
+    ensure_schemas(spark, ("silver",))
+    seen = []
+    g = PipelineGraph()
+    g.register(ViewDef("tsk_a", "silver", (), lambda s: s.range(3)))
+    g.register(ViewDef("tsk_b", "silver", ("tsk_a",), lambda s: s.table("silver.tsk_a")))
+    tasks = {"count_b": (["silver.tsk_b"], lambda: seen.append(spark.table("silver.tsk_b").count()))}
+    assert g.refresh(spark, tasks=tasks) == ["silver.tsk_a", "silver.tsk_b"]
+    assert seen == [3]

@@ -21,13 +21,20 @@ from youtube_analytics_lakehouse_databricks_spark.sources.fixtures import CHANNE
 TODAY = "2025-08-04"
 
 
+# Spark jobs the fixture's run_pipeline call submitted, in total.
+RUN_JOBS: dict[str, int] = {}
+
+
 @pytest.fixture(scope="module", autouse=True)
 def pipeline_run(spark):
     ensure_schemas(spark)
     ctxs = run_contexts(3)
     ingest(spark, FixtureSource(gen=1), ctxs[0])
     ingest(spark, FixtureSource(gen=2), ctxs[1])
+    next_job_id = spark.sparkContext._jsc.sc().dagScheduler().nextJobId
+    start = next_job_id()
     report = run_pipeline(spark, FixtureSource(gen=3), ctxs[2], today=TODAY, optimize=True)
+    RUN_JOBS["total"] = next_job_id() - start
     return report
 
 
@@ -35,6 +42,16 @@ def test_runner_reports_success(pipeline_run):
     assert pipeline_run["status"] == "success"
     assert len(pipeline_run["refreshed"]) == 19  # 14 silver + 5 gold
     assert pipeline_run["ingested"]["videos_raw"] == 1
+
+
+def test_runner_reports_every_stage(pipeline_run):
+    """Each stage reports its wall time and jobs; the stages cover the
+    whole run, so their jobs add up to every job the run submitted."""
+    stages = pipeline_run["stages"]
+    assert list(stages) == ["init", "ingest", "contract", "refresh", "optimize", "smoke", "finalize"]
+    assert all(s["wall_s"] >= 0 and s["jobs"] >= 0 for s in stages.values())
+    assert stages["refresh"]["jobs"] > 0 and stages["ingest"]["jobs"] > 0
+    assert sum(s["jobs"] for s in stages.values()) == RUN_JOBS["total"]
 
 
 def test_runner_optimize_zorders_gold_facts(pipeline_run, spark):

@@ -2,13 +2,15 @@
 
 The reference embeds this as a 249-row inline VALUES relation
 (reference: lakeflow/country_reference.sql:4-257); here it is a module
-constant fed to spark.createDataFrame. Data source: the public ISO-3166
+constant fed to storage.local_frame (a JVM LocalRelation). Data source: the public ISO-3166
 standard (short English names).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+
+from youtube_analytics_lakehouse_databricks_spark import storage
 
 _CSV = """\
 AD,Andorra
@@ -273,4 +275,4 @@ def country_rows() -> list[tuple[str, str]]:
 def dim_country_reference(spark: SparkSession) -> DataFrame:
     """249-row (country_code, country_name) relation
     (reference: lakeflow/country_reference.sql:2-257)."""
-    return spark.createDataFrame(country_rows(), "country_code string, country_name string")
+    return storage.local_frame(spark, country_rows(), "country_code string, country_name string")

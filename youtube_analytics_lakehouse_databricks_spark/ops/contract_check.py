@@ -78,10 +78,9 @@ def validate_bronze_contract(
     return errors
 
 
-def assert_bronze_contract(spark: SparkSession, **kwargs) -> None:
+def raise_on_contract_errors(errors: list[str]) -> None:
     """Raise with the full violation list, like the reference's
     collect-then-raise (unity_catalog_setup.py:233-236)."""
-    errors = validate_bronze_contract(spark, **kwargs)
     if errors:
         details = "\n".join(f" - {e}" for e in errors)
         raise RuntimeError(f"Bronze contract validation failed:\n{details}")

@@ -48,7 +48,10 @@ FINALIZE_COLUMNS = [
 
 
 def init_run_log(spark: SparkSession, ctx: RunContext, **extra: str) -> None:
-    """Append the run's context row (init_run_context.py:104-158)."""
+    """Append the run's context row (init_run_context.py:104-158) in one
+    job: the finalize columns are already there as NULLs, and
+    ``created_by`` defaults to ``current_user()`` (init_run_context.py:69),
+    evaluated inside the write."""
     spark.sql("CREATE DATABASE IF NOT EXISTS ops")
     import uuid
 
@@ -62,20 +65,22 @@ def init_run_log(spark: SparkSession, ctx: RunContext, **extra: str) -> None:
         extra.get("job_id"),
         extra.get("job_run_id"),
         extra.get("task_run_id"),
-        extra.get("created_by")
-        or spark.sql("SELECT current_user()").collect()[0][0],  # init_run_context.py:69
+        extra.get("created_by"),
         extra.get("context_json"),
     )
-    df = spark.createDataFrame([row], RUN_LOG_SCHEMA)
+    df = storage.local_frame(spark, [row], RUN_LOG_SCHEMA).withColumn(
+        "created_by", F.coalesce(F.col("created_by"), F.expr("current_user()"))
+    )
+    for c, t in FINALIZE_COLUMNS:
+        df = df.withColumn(c, F.lit(None).cast(t))
     if spark.catalog.tableExists(RUN_LOG_FQN):
-        existing_cols = [f.name for f in spark.table(RUN_LOG_FQN).schema]
-        for c in existing_cols:
-            if c not in df.columns:
-                df = df.withColumn(c, F.lit(None).cast(dict(FINALIZE_COLUMNS)[c]))
         # One layout everywhere (create/append/rewrite all partition by
         # snapshot_date, the reference's declared layout —
         # init_run_context.py:123): a partitioned append against the
-        # bootstrap-created table must match or Spark rejects it.
+        # bootstrap-created table must match or Spark rejects it. A table
+        # written before finalize existed lacks its columns until
+        # finalize_run adds them, so the append keeps to its columns.
+        existing_cols = [f.name for f in spark.table(RUN_LOG_FQN).schema]
         storage.write_table(df.select(*existing_cols), RUN_LOG_FQN, "append", ("snapshot_date",))
     else:
         storage.write_table(df, RUN_LOG_FQN, "overwrite", ("snapshot_date",))
@@ -142,5 +147,5 @@ def latest_run_status(spark: SparkSession) -> str | None:
 def _overwrite_run_log(spark: SparkSession, df) -> None:
     rows = df.collect()  # run log is O(runs) tiny — driver-side rewrite is fine
     storage.write_table(
-        spark.createDataFrame(rows, df.schema), RUN_LOG_FQN, "overwrite", ("snapshot_date",)
+        storage.local_frame(spark, rows, df.schema), RUN_LOG_FQN, "overwrite", ("snapshot_date",)
     )

@@ -41,22 +41,22 @@ def smoke_checks(
     status = latest_run_status(spark)
     report["latest_run_success"] = {"passed": status == "success", "status": status}
 
-    counts = {t: spark.table(t).count() for t in CORE_GOLD if spark.catalog.tableExists(t)}
-    report["core_gold_nonempty"] = {
-        "passed": bool(counts) and all(c > 0 for c in counts.values()),
-        "counts": counts,
-    }
-
-    lags = {}
+    # One aggregate per core gold table yields both its row count and its
+    # recency lag.
     today_col = F.to_date(F.lit(today)) if today else F.current_date()
+    counts, lags = {}, {}
     for t in CORE_GOLD:
         if spark.catalog.tableExists(t):
             row = (
                 spark.table(t)
-                .agg(F.datediff(today_col, F.max("date")).alias("lag"))
+                .agg(F.count(F.lit(1)).alias("n"), F.datediff(today_col, F.max("date")).alias("lag"))
                 .collect()[0]
             )
-            lags[t] = row["lag"]
+            counts[t], lags[t] = row["n"], row["lag"]
+    report["core_gold_nonempty"] = {
+        "passed": bool(counts) and all(c > 0 for c in counts.values()),
+        "counts": counts,
+    }
     report["gold_recency"] = {
         "passed": bool(lags) and all(lag is not None and lag <= max_lag_days for lag in lags.values()),
         "lags": lags,

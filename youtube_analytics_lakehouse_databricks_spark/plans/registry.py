@@ -8,15 +8,19 @@ dependency order and persist it with overwrite-saveAsTable (SURVEY.md §3.1).
 
 Design for scale: each view body is a plain DataFrame (Catalyst plans it),
 the write is a full recompute — the same semantics Lakeflow guarantees.
-Independent views at the same topological depth refresh concurrently on a
-4-thread pool (parity with the reference's dbt `threads: 4`); at 100 TB
-you'd also partition the fact writes by date (partitionBy) so downstream
-date-pruned reads skip files.
+Views refresh on a 4-thread pool (parity with the reference's dbt
+`threads: 4`), each submitted as soon as its own dependencies are
+written, longest remaining path first — no level waits for its slowest
+member. Callers can hang tasks that only read (the runner's per-table
+quality checks) on the same walk. At 100 TB you'd also partition the
+fact writes by date (partitionBy) so downstream date-pruned reads skip
+files.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import functools
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
 from graphlib import TopologicalSorter
 
@@ -60,35 +64,68 @@ class PipelineGraph:
         ts = TopologicalSorter({n: set(v.deps) & set(self.views) for n, v in self.views.items()})
         return [self.views[n] for n in ts.static_order()]
 
-    def _run_levels(self, fn, wanted: set[str], max_workers: int) -> list:
-        """Walk the dependency graph level by level, running ``fn(view)``
-        for same-depth views concurrently on a thread pool (Spark's
-        scheduler interleaves the submitted jobs) — parity with the
-        reference's dbt `threads: 4` (dbt/profiles.yml:12). Each level is
-        a barrier, so a view never builds before its deps are written.
-        Returns fn results in deterministic (level, registration) order."""
-        from concurrent.futures import ThreadPoolExecutor
+    def _walk(self, fn, wanted: set[str], max_workers: int, tasks: dict | None = None) -> list:
+        """Run ``fn(view)`` for every wanted view, plus each task in
+        ``tasks`` ({name: (FQNs of the views it reads, call)}), on one
+        thread pool (Spark's scheduler interleaves the submitted jobs) —
+        parity with the reference's dbt `threads: 4` (dbt/profiles.yml:12).
+        A node is submitted as soon as every node it depends on is done,
+        longest remaining path first: a view never builds before its deps
+        are written, and never waits for an unrelated sibling.
+        Returns the views' fn results in deterministic (depth,
+        registration) order; tasks return nothing here."""
+        from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
-        graph = {n: set(self.views[n].deps) & wanted for n in self.views if n in wanted}
-        ts = TopologicalSorter(graph)
+        deps = {n: set(self.views[n].deps) & wanted for n in self.views if n in wanted}
+        calls = {n: functools.partial(fn, self.views[n]) for n in deps}
+        name_of = {v.fqn: n for n, v in self.views.items() if n in wanted}
+        for name, (reads, call) in (tasks or {}).items():
+            deps[name] = {name_of[f] for f in reads if f in name_of}
+            calls[name] = call
+        reg_order = {n: i for i, n in enumerate(calls)}
+        topo = list(TopologicalSorter(deps).static_order())
+        depth: dict[str, int] = {}
+        for n in topo:
+            depth[n] = max((depth[d] + 1 for d in deps[n]), default=0)
+        height = dict.fromkeys(topo, 1)  # nodes on the longest path down from here
+        for n in reversed(topo):
+            for d in deps[n]:
+                height[d] = max(height[d], height[n] + 1)
+
+        ts = TopologicalSorter(deps)
         ts.prepare()
-        reg_order = {n: i for i, n in enumerate(self.views)}
-        results: list = []
+        ready: list[str] = []
+        running: dict = {}
+        results: dict[str, object] = {}
         with ThreadPoolExecutor(max_workers=max_workers) as pool:
             while ts.is_active():
-                level = sorted(ts.get_ready(), key=reg_order.__getitem__)
-                results.extend(pool.map(lambda n: fn(self.views[n]), level))
-                for name in level:
-                    ts.done(name)
-        return results
+                ready.extend(ts.get_ready())
+                ready.sort(key=lambda n: (-height[n], reg_order[n]))
+                while ready and len(running) < max_workers:
+                    n = ready.pop(0)
+                    running[pool.submit(calls[n])] = n
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for f in done:
+                    n = running.pop(f)
+                    results[n] = f.result()
+                    ts.done(n)
+        views = sorted((n for n in results if n in self.views), key=lambda n: (depth[n], reg_order[n]))
+        return [results[n] for n in views]
 
     def refresh(
-        self, spark: SparkSession, only: set[str] | None = None, max_workers: int = 4
+        self,
+        spark: SparkSession,
+        only: set[str] | None = None,
+        max_workers: int = 4,
+        tasks: dict[str, tuple[Iterable[str], Callable[[], object]]] | None = None,
     ) -> list[str]:
         """Full refresh in dependency order; returns refreshed FQNs.
-        Same-depth views refresh concurrently (see _run_levels). ``only``
+        Independent views refresh concurrently (see _walk). ``only``
         restricts to a subset *plus* everything upstream of it, mirroring
-        a scoped pipeline refresh.
+        a scoped pipeline refresh. ``tasks`` ({name: (FQNs of the views it
+        reads, call)}) join the same walk and run as soon as those views
+        are written, like dbt `build` running a model's tests right after
+        the model; they write nothing and add nothing to the result.
         """
         from youtube_analytics_lakehouse_databricks_spark import storage
 
@@ -98,14 +135,14 @@ class PipelineGraph:
             storage.write_table(view.builder(spark), view.fqn, "overwrite", view.partition_by)
             return view.fqn
 
-        return self._run_levels(_write, wanted, max_workers)
+        return self._walk(_write, wanted, max_workers, tasks)
 
     def refresh_incremental(self, spark: SparkSession, max_workers: int = 4) -> dict[str, str]:
         """Incremental refresh: views with merge support process only
         bronze envelopes newer than their stored watermark and merge into
         the existing table (union + latest-wins + swap — the same math as
         a full recompute, restricted to touched keys); everything else
-        fully recomputes. Same-depth views refresh concurrently (each
+        fully recomputes. Independent views refresh concurrently (each
         touches only its own table; watermark writes are serialized by a
         lock inside set_watermark). Returns {fqn: mode}.
 
@@ -143,7 +180,7 @@ class PipelineGraph:
             set_watermark(spark, view.fqn, _max_ingest(spark.table(view.fqn)))
             return view.fqn, "merged"
 
-        return dict(self._run_levels(_one, set(self.views), max_workers))
+        return dict(self._walk(_one, set(self.views), max_workers))
 
     def _with_upstream(self, names: set[str]) -> set[str]:
         out: set[str] = set()

@@ -6,7 +6,7 @@ runtime.
 
 Concurrency contract: the refresh pipeline is a SINGLE WRITER PROCESS
 (the reference's job orchestration runs one pipeline refresh at a time —
-databricks.yml triggered jobs). Within that process, same-depth views
+databricks.yml triggered jobs). Within that process, independent views
 refresh on a thread pool, so ``set_watermark``'s read-modify-write of the
 whole table is serialized with an in-process lock (losing a concurrent
 update would drop ANOTHER view's fresh watermark row, forcing it into a
@@ -30,7 +30,7 @@ WATERMARKS_FQN = "ops.refresh_watermarks"
 def get_watermark(spark: SparkSession, view_fqn: str) -> dt.datetime | None:
     # Reads take the same lock as set_watermark: the overwrite saveAsTable in
     # write_table is drop-and-rewrite (not atomic), so an unlocked read racing
-    # a same-level sibling's set_watermark could hit a transient missing-table
+    # a concurrent view's set_watermark could hit a transient missing-table
     # window and silently return None, forcing a spurious full re-merge. The
     # table is O(views) rows, so serializing reads costs nothing.
     with _WRITE_LOCK:
@@ -59,7 +59,9 @@ def set_watermark(spark: SparkSession, view_fqn: str, ts: dt.datetime | None) ->
         from youtube_analytics_lakehouse_databricks_spark import storage
 
         storage.write_table(
-            spark.createDataFrame(list(current.items()), "view_fqn string, high_water_ts timestamp"),
+            storage.local_frame(
+                spark, list(current.items()), "view_fqn string, high_water_ts timestamp"
+            ),
             WATERMARKS_FQN,
             "overwrite",
         )

@@ -3,7 +3,10 @@
 Mirrors the reference's write path (reference:
 job_tasks/bronze/ingest_data_api_to_bronze.py:185-200 `_write_payload`,
 :91-93 `_delete_existing_run_rows`): build 7-column envelope rows, delete
-any prior rows for the run_id (re-run safety), append.
+any prior rows for the run_id (re-run safety), append. One probe job
+finds which touched tables hold such rows; the tables are then appended
+one after another, each from a JVM `LocalRelation` (storage.local_frame),
+so no ingest job runs Python workers.
 
 The HTTP client sits behind the PayloadSource protocol so tests inject
 fixture payloads (SURVEY §7.1 `ingest/`); a real deployment plugs an
@@ -20,6 +23,7 @@ partitions.
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import json
 import uuid
 from collections.abc import Iterable
@@ -77,26 +81,26 @@ def envelope_rows(ctx: RunContext, payloads: Iterable[tuple[str, dict]]) -> dict
     return out
 
 
-def delete_run_rows(spark: SparkSession, fqn: str, run_id: str) -> None:
-    """Idempotency: drop any rows a prior attempt of this run wrote
-    (reference: ingest_data_api_to_bronze.py:91-93). Parameterized to avoid
+def tables_with_run(spark: SparkSession, fqns: list[str], run_id: str) -> set[str]:
+    """The tables among ``fqns`` holding rows a prior attempt of this run
+    wrote (reference: ingest_data_api_to_bronze.py:91-93), found in one
+    job: the per-table ``run_id = ?`` probes are unioned and collected
+    once. Each probe returns only its table's name, one row per prior
+    row, so a first attempt brings back nothing. Parameterized to avoid
     the reference's string-escaping dance (SURVEY §4 last row)."""
-    from youtube_analytics_lakehouse_databricks_spark import storage
-
-    if not spark.catalog.tableExists(fqn):
-        return
-    existing = spark.table(fqn)
-    if existing.filter(F.col("run_id") == F.lit(run_id)).limit(1).count() == 0:
-        return
-    # On Delta this is a metadata-level DELETE; on parquet a staged rewrite
-    # of the complement, pruned to the affected snapshot_date partitions.
-    sanitized = run_id.replace("'", "''")
-    storage.delete_where(spark, fqn, f"run_id = '{sanitized}'")
+    probes = [
+        spark.table(fqn).filter(F.col("run_id") == F.lit(run_id)).select(F.lit(fqn).alias("fqn"))
+        for fqn in fqns
+        if spark.catalog.tableExists(fqn)
+    ]
+    if not probes:
+        return set()
+    return {r["fqn"] for r in functools.reduce(DataFrame.unionAll, probes).collect()}
 
 
 def append_envelopes(spark: SparkSession, table: str, rows: list[tuple]) -> None:
     fqn = f"bronze.{table}"
-    df: DataFrame = spark.createDataFrame(rows, contract.BRONZE_SCHEMA)
+    df = storage.local_frame(spark, rows, contract.BRONZE_SCHEMA)
     mode = "append" if spark.catalog.tableExists(fqn) else "overwrite"
     # Bronze layout: partitioned by snapshot_date so downstream date
     # predicates prune files (bootstrap_unity_catalog.sql:26 et al.).
@@ -107,9 +111,16 @@ def ingest(spark: SparkSession, source: PayloadSource, ctx: RunContext) -> dict[
     """Full ingestion pass: fetch -> delete prior run rows -> append.
     Returns rows written per table."""
     grouped = envelope_rows(ctx, source.fetch(ctx))
+    rerun = tables_with_run(spark, [f"bronze.{t}" for t in grouped], ctx.run_id)
     written: dict[str, int] = {}
     for table, rows in grouped.items():
-        delete_run_rows(spark, f"bronze.{table}", ctx.run_id)
+        fqn = f"bronze.{table}"
+        if fqn in rerun:
+            # On Delta a metadata-level DELETE; on parquet a staged rewrite
+            # of the complement, pruned to the affected snapshot_date
+            # partitions.
+            sanitized = ctx.run_id.replace("'", "''")
+            storage.delete_where(spark, fqn, f"run_id = '{sanitized}'")
         append_envelopes(spark, table, rows)
         written[table] = len(rows)
     return written

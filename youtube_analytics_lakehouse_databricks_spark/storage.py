@@ -8,13 +8,42 @@ fast paths light up (metadata-only DELETE, keyed MERGE, OPTIMIZE);
 without it the semantically-identical parquet rewrites run instead.
 
 Only capability detection lives here — callers never import delta
-directly.
+directly. ``local_frame`` turns driver-side rows into a JVM
+``LocalRelation`` for those writes.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def local_frame(spark: SparkSession, rows: list, schema: T.StructType | str) -> DataFrame:
+    """Driver-side ``rows`` as a DataFrame over a JVM ``LocalRelation``.
+
+    ``createDataFrame(list, schema)`` plans a ``LogicalRDD`` over a
+    pickled ``parallelize``, so every job over it runs its tasks through
+    Python workers. Here each row goes
+    through the schema's own ``toInternal`` (dates -> epoch days, naive
+    timestamps -> epoch us, exactly as ``createDataFrame`` converts them)
+    into one Arrow table, which Spark turns into a ``LocalRelation`` with
+    the same schema, nullability included. A NULL in a non-nullable
+    field raises, as ``createDataFrame`` does."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    internal = [schema.toInternal(r) for r in rows]
+    arrow_schema = to_arrow_schema(schema)
+    columns = []
+    for i, field in enumerate(arrow_schema):
+        col = pa.array([r[i] for r in internal], type=field.type)
+        if col.null_count and not field.nullable:
+            raise ValueError(f"field {field.name}: NULL in a non-nullable field")
+        columns.append(col)
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow_schema))
 
 
 def delta_available() -> bool:
