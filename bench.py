@@ -361,8 +361,8 @@ def _bench_only() -> dict[str, Query]:
 # boundary. Remaining first-epoch row ivfpq_refined_search (two-stage
 # ADC-shortlist + exact re-rank; the timed number covers BOTH stages —
 # shortlist at builder-call time, re-rank at the sink — and the input-
-# bytes side of the claim is measured by tools/ivf_prune_probe.py's
-# refined_read_fraction series). doc_quality_scores carries MORE work
+# bytes side of the claim is measured by the refined_read_fraction
+# series recorded in COVERAGE.md, "Persisted IVF index" row). doc_quality_scores carries MORE work
 # since r13 (the hashed_embedding oracle rides it as extra columns —
 # per-token sha2 + nibble folds, a pure zero-shuffle projection joined
 # at doc grain; ~1.15 s warm at sf0.1 vs 0.167 before, all of it the

@@ -152,20 +152,6 @@ def test_stagedfold_state_machine(spark, tmp_path):
 # --- hardened call sites: named error on unreachable schemes ----------------
 
 
-def test_ingest_ann_batch_remote_raises(spark):
-    from youtube_analytics_lakehouse_databricks_spark.streaming.ann_stream import ingest_ann_batch
-
-    with pytest.raises(RemotePathError, match="ingest_ann_batch"):
-        ingest_ann_batch(_df(spark), 0, "vec_id", "embedding", NOSUCH)
-
-
-def test_compact_ann_stream_remote_raises(spark):
-    from youtube_analytics_lakehouse_databricks_spark.streaming.ann_stream import compact_ann_stream
-
-    with pytest.raises(RemotePathError, match="compact_ann_stream"):
-        compact_ann_stream(spark, NOSUCH, keep_last=2)
-
-
 def test_ivf_search_remote_raises(spark):
     from youtube_analytics_lakehouse_databricks_spark.operators.ivf_index import ivf_search
 
@@ -215,62 +201,7 @@ def test_curation_state_save_load_unreachable_raise(spark):
         CurationState(df, df, df, df).save(NOSUCH)
 
 
-def test_curated_state_probe_remote_raises(spark):
-    from youtube_analytics_lakehouse_databricks_spark.streaming.curation_stream import _state_exists
-
-    with pytest.raises(RemotePathError, match="state probe"):
-        _state_exists(spark, NOSUCH)
-
-
-def test_compact_audit_log_remote_raises(spark):
-    from youtube_analytics_lakehouse_databricks_spark.streaming.curation_stream import compact_audit_log
-
-    with pytest.raises(RemotePathError, match="compact_audit_log"):
-        compact_audit_log(spark, NOSUCH)
-
-
 # --- correct behavior on a reachable non-os-path scheme (file: URI) ---------
-
-
-def test_streamed_index_lifecycle_on_file_uri(spark, tmp_path):
-    """Bootstrap -> guard -> ingest -> compact -> search, all addressed
-    by a ``file:`` URI: the guards and compaction really route through
-    the Hadoop FileSystem (an os.path fallback would see no directory
-    at the URI and silently mis-handle every step)."""
-    from youtube_analytics_lakehouse_databricks_spark.operators.ivf_index import (
-        build_ivf_index,
-        ivf_search,
-    )
-    from youtube_analytics_lakehouse_databricks_spark.streaming.ann_stream import (
-        bootstrap_ann_stream_index,
-        compact_ann_stream,
-        ingest_ann_batch,
-    )
-
-    df = _df(spark, n=120)
-    uri = f"file:{tmp_path}/stream_idx"
-    os_path = f"{tmp_path}/stream_idx"
-    bootstrap_ann_stream_index(df, "vec_id", "embedding", uri, n_cells=4, kmeans_iters=2)
-    for bid in range(4):
-        ingest_ann_batch(
-            df.filter(f"vec_id % 4 = {bid}"), bid, "vec_id", "embedding", uri
-        )
-    assert compact_ann_stream(spark, uri, keep_last=2) == 2
-    names = sorted(
-        e for e in os.listdir(f"{os_path}/corpus") if e.startswith("batch_id=")
-    )
-    assert names == ["batch_id=0", "batch_id=2", "batch_id=3"]
-    hits = ivf_search(
-        spark, os_path, df.filter("vec_id < 3"), "vec_id", "embedding",
-        n_probe=2, k=5, exclude_self=True,
-    )
-    assert len(hits.collect()) == 15
-
-    # and the layout guard FIRES through the URI against a batch-built index
-    batch_uri = f"file:{tmp_path}/batch_idx"
-    build_ivf_index(df, "vec_id", "embedding", f"{tmp_path}/batch_idx", n_cells=4)
-    with pytest.raises(ValueError, match="BATCH-BUILT index layout"):
-        ingest_ann_batch(df, 0, "vec_id", "embedding", batch_uri)
 
 
 def test_bpe_model_load_on_file_uri(spark, tmp_path):

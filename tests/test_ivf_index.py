@@ -10,6 +10,8 @@ the same quantizer training corpus); guards are loud.
 from __future__ import annotations
 
 import io
+import os
+import time
 from contextlib import redirect_stdout
 
 import numpy as np
@@ -41,6 +43,14 @@ def _df(spark, X, start=0):
 
 def _res(df):
     return sorted(map(tuple, df.collect()))
+
+
+def _backdate(p, seconds=7200):
+    t = time.time() - seconds
+    os.utime(p, (t, t))
+
+
+BATCH_LAYOUT_REFUSAL = "holds batch_id=K/cell=J partitions"
 
 
 @pytest.fixture(scope="module")
@@ -293,19 +303,6 @@ def test_bucketed_corpus_elides_its_search_exchange(spark, tmp_path):
     assert _res(out_bs) == _res(out_p2)
 
 
-def test_bucket_table_requires_corpus_write(spark, tmp_path):
-    """write_corpus=False (the streaming bootstrap path) has no corpus to
-    bucket — combining it with bucket_table fails loudly."""
-    import numpy as np
-
-    df = _df(spark, np.ones((8, D)))
-    with pytest.raises(ValueError, match="bucket_table requires write_corpus"):
-        build_ivf_index(
-            df, "vec_id", "embedding", str(tmp_path / "x"),
-            n_cells=2, write_corpus=False, bucket_table="ivfidx.nope",
-        )
-
-
 def test_salted_distributed_search_matches_unsalted(spark, index):
     """The hot-cell guard changes the physical grouping only: n_salt=3
     sub-splits every cell by pmod(id, 3) (bounded per-task groups), and
@@ -367,15 +364,17 @@ def test_cell_stats_detects_append_drift(spark, index, tmp_path):
 
 
 def test_cell_stats_on_empty_index_raises_named(spark, tmp_path):
-    """A bootstrap-only index (write_corpus=False, nothing ingested)
-    has no occupancy to report — named error, not a raw path failure."""
+    """An index whose corpus/ is gone has no occupancy to report —
+    named error, not a raw path failure."""
+    import shutil
+
     from youtube_analytics_lakehouse_databricks_spark.operators.ivf_index import ivf_cell_stats
 
     path = str(tmp_path / "empty")
     build_ivf_index(
-        _df(spark, _vecs(n=20)), "vec_id", "embedding", path,
-        n_cells=2, write_corpus=False,
+        _df(spark, _vecs(n=20)), "vec_id", "embedding", path, n_cells=2,
     )
+    shutil.rmtree(f"{path}/corpus")
     with pytest.raises(ValueError, match="no corpus under"):
         ivf_cell_stats(spark, path)
 
@@ -518,26 +517,12 @@ def test_suggest_n_salt_bounds_the_hot_cell(spark, index, tmp_path):
     assert sorted(salted, key=key) == sorted(plain_rows, key=key)
 
 
-def test_compaction_on_missing_corpus_raises_named(spark, tmp_path):
-    """compact_ann_stream / compact_audit_log pointed at a wrong path
-    must FAIL, not report 'nothing to fold' forever (the r13 review's
-    silent-no-op catch)."""
-    from youtube_analytics_lakehouse_databricks_spark.streaming.ann_stream import compact_ann_stream
-    from youtube_analytics_lakehouse_databricks_spark.streaming.curation_stream import compact_audit_log
-
-    with pytest.raises(ValueError, match="no corpus under"):
-        compact_ann_stream(spark, str(tmp_path / "nope"), keep_last=2)
-    with pytest.raises(ValueError, match="no audit log at"):
-        compact_audit_log(spark, str(tmp_path / "nope_audit"))
-
-
 def test_compact_ivf_index_folds_append_files(spark, index, tmp_path, monkeypatch):
     """The batch-append layout's small-file maintenance: four appends
     leave multiple files per cell; compaction folds every over-budget
     cell to ONE file with the row set and search results bit-identical,
     is idempotent (second call folds nothing), recovers from a
-    simulated crash mid-apply, and refuses the streamed layout (that
-    one folds with compact_ann_stream)."""
+    simulated crash mid-apply, and refuses a batch_id=K/cell=J corpus."""
     import os
     import shutil
 
@@ -600,11 +585,11 @@ def test_compact_ivf_index_folds_append_files(spark, index, tmp_path, monkeypatc
     assert got == want
     assert compact_ivf_index(spark, target) == 0  # idempotent
 
-    # streamed layout: named refusal pointing at the right tool
+    # batch_id=K/cell=J layout: named refusal
     streamed = str(tmp_path / "streamed")
     shutil.copytree(path, streamed)
     os.makedirs(f"{streamed}/corpus/batch_id=0", exist_ok=True)
-    with pytest.raises(ValueError, match="compact_ann_stream"):
+    with pytest.raises(ValueError, match=BATCH_LAYOUT_REFUSAL):
         compact_ivf_index(spark, streamed)
 
 
@@ -614,7 +599,7 @@ def test_index_health_matrix(spark, index, tmp_path):
     pile into one frozen cell), DIVERGED (half-append into the dir
     corpus only), and mid-FOLD (stage dir present), every row flags
     with its remediation named; after the remediations run, every row
-    is green. Streamed/missing corpora raise named errors."""
+    is green. batch_id=K/cell=J and missing corpora raise named errors."""
     import os
     import shutil
 
@@ -724,15 +709,130 @@ def test_index_health_matrix(spark, index, tmp_path):
     assert not row["ok"] and ".compact_lock" in row["remediation"]
     os.remove(lock)
 
-    # named refusals: missing corpus and streamed layout
+    # named refusals: missing corpus and batch_id=K/cell=J layout
     with pytest.raises(ValueError, match="no corpus under"):
         index_health(spark, str(tmp_path / "nope"))
     streamed = str(tmp_path / "health_streamed")
     base, _ = index
     shutil.copytree(base, streamed)
     os.makedirs(f"{streamed}/corpus/batch_id=0", exist_ok=True)
-    with pytest.raises(ValueError, match="streaming.ann_stream"):
+    with pytest.raises(ValueError, match=BATCH_LAYOUT_REFUSAL):
         index_health(spark, streamed)
+
+
+def test_batch_id_layout_refused_by_append_and_health(spark, index, tmp_path):
+    """A corpus holding batch_id=K/cell=J partitions (written by an
+    earlier version's streamed ingest) is input from outside: appending
+    top-level cell=J partitions beside it would break partition
+    discovery, so append_ivf_index and index_health both refuse with
+    the one named message. The guard lists through the Hadoop FS, so it
+    fires through a file: URI too. compact_ivf_index's refusal is in
+    test_compact_ivf_index_folds_append_files."""
+    import shutil
+
+    from youtube_analytics_lakehouse_databricks_spark.operators.ivf_index import (
+        index_health,
+    )
+
+    path, df = index
+    target = str(tmp_path / "batch_id_layout")
+    shutil.copytree(path, target)
+    os.makedirs(f"{target}/corpus/batch_id=0")
+    for where in (target, f"file:{target}"):
+        with pytest.raises(ValueError, match=BATCH_LAYOUT_REFUSAL):
+            append_ivf_index(
+                _df(spark, _vecs(n=8, seed=3), start=50_000),
+                "vec_id", "embedding", where,
+            )
+    assert not [n for n in os.listdir(f"{target}/corpus") if n.startswith(".append")]
+    with pytest.raises(ValueError, match=BATCH_LAYOUT_REFUSAL):
+        index_health(spark, target)
+
+
+def test_clear_stale_markers_contract(spark, tmp_path):
+    from youtube_analytics_lakehouse_databricks_spark.operators.ivf_index import (
+        build_ivf_index,
+        clear_stale_markers,
+        index_health,
+    )
+
+    with pytest.raises(ValueError, match="does not exist"):
+        clear_stale_markers(spark, str(tmp_path / "missing"))
+
+    path = str(tmp_path / "bidx")
+    build_ivf_index(
+        _df(spark, _vecs(n=120, d=8, seed=3)), "vec_id", "embedding", path,
+        n_cells=4, kmeans_iters=2,
+    )
+    # nothing to clear: empty report
+    assert clear_stale_markers(spark, path).collect() == []
+
+    sentinel = f"{path}/corpus/.append_inprogress_deadbeef"
+    lock = f"{path}/corpus/.compact_lock"
+    for p in (sentinel, lock):
+        with open(p, "w") as fh:
+            fh.write("crashed")
+
+    # FRESH markers: refuse the whole call, delete nothing
+    with pytest.raises(ValueError, match="younger than.*LIVE"):
+        clear_stale_markers(spark, path)
+    assert os.path.exists(sentinel) and os.path.exists(lock)
+
+    # one stale + one fresh still refuses (live concurrency in flight)
+    _backdate(sentinel)
+    with pytest.raises(ValueError, match="younger than"):
+        clear_stale_markers(spark, path)
+    assert os.path.exists(sentinel)
+
+    # both stale: cleared, reported with kinds and ages, and the
+    # index_health rows the markers were blocking go green
+    _backdate(lock)
+    report = sorted(
+        (r["marker"], r["kind"], r["age_sec"])
+        for r in clear_stale_markers(spark, path).collect()
+    )
+    assert [(m, k) for m, k, _ in report] == [
+        (sentinel, "append_sentinel"), (lock, "fold_lock"),
+    ]
+    assert all(a > 3600 for _m, _k, a in report)
+    assert not os.path.exists(sentinel) and not os.path.exists(lock)
+    health = {r["check"]: r for r in index_health(spark, path).collect()}
+    assert health["append_sentinels"]["ok"] and health["fold_lock"]["ok"]
+    # and index_health's stale remediation names this helper
+    with open(sentinel, "w") as fh:
+        fh.write("crashed")
+    _backdate(sentinel)
+    health = {r["check"]: r for r in index_health(spark, path).collect()}
+    assert "clear_stale_markers" in health["append_sentinels"]["remediation"]
+    clear_stale_markers(spark, path)
+
+
+def test_compactions_take_over_stranded_lock(spark, tmp_path):
+    """r16: lock_takeover_after= automates the stale-lock remediation
+    for scheduled maintenance — a fold blocked by a stranded (backdated)
+    lock succeeds when the threshold passes, refuses while fresh."""
+    from youtube_analytics_lakehouse_databricks_spark.operators.ivf_index import (
+        append_ivf_index,
+        build_ivf_index,
+        compact_ivf_index,
+    )
+
+    bpath = str(tmp_path / "bidx2")
+    build_ivf_index(
+        _df(spark, _vecs(n=120, d=8, seed=3)), "vec_id", "embedding", bpath,
+        n_cells=4, kmeans_iters=2,
+    )
+    append_ivf_index(
+        _df(spark, _vecs(n=20, d=8, seed=9), start=5_000), "vec_id", "embedding", bpath
+    )
+    block = f"{bpath}/corpus/.compact_lock"
+    with open(block, "w") as fh:
+        fh.write("dead:process")
+    _backdate(block)
+    with pytest.raises(ValueError, match="another fold holds the lock"):
+        compact_ivf_index(spark, bpath)
+    assert compact_ivf_index(spark, bpath, lock_takeover_after=3600) > 0
+    assert not os.path.exists(block)
 
 
 def test_compaction_append_mutual_exclusion_flat(spark, index, tmp_path, monkeypatch):

@@ -338,15 +338,6 @@ def test_distributed_search_exchange_count_and_bucket_elision(spark, tmp_path):
     assert _res(out_b2) == _res(out_p2)
 
 
-def test_ivfpq_bucket_table_requires_corpus_write(spark, tmp_path):
-    df = _df(spark, _planted(n=8))
-    with pytest.raises(ValueError, match="bucket_table requires write_corpus"):
-        build_ivfpq_index(
-            df, "vec_id", "embedding", str(tmp_path / "x"),
-            n_cells=2, write_corpus=False, bucket_table="ivfpqidx.nope",
-        )
-
-
 def test_guards(spark, index, tmp_path):
     path, df = index
     strdf = df.selectExpr("CAST(vec_id AS STRING) AS vec_id", "embedding")

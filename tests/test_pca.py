@@ -278,70 +278,6 @@ def test_incremental_moments_match_full_fit(spark, tmp_path):
         ma_back.merge(bad)
 
 
-def test_streamed_moments_equal_batch_fit(spark, tmp_path):
-    """Streaming arrival: per-micro-batch moment partials merged at read
-    time reproduce the full-corpus fit, and a crash-replayed batch
-    overwrites only its own partition (no double counting)."""
-    import json
-    import os
-
-    from youtube_analytics_lakehouse_databricks_spark.operators.pca import solve_pca
-    from youtube_analytics_lakehouse_databricks_spark.streaming.pca_stream import (
-        ingest_moments_batch,
-        load_streamed_moments,
-        pca_moments_stream,
-    )
-
-    X = _planted(n=240, d=10, seed=23)
-    landing = str(tmp_path / "landing")
-    os.makedirs(landing)
-
-    def land(name, rows):
-        with open(f"{landing}/{name}", "w") as f:
-            for i, row in rows:
-                f.write(
-                    json.dumps({"vec_id": i, "embedding": [float(x) for x in row]})
-                    + "\n"
-                )
-
-    land("a.jsonl", list(enumerate(X[:150])))
-    dirs = {
-        "moments": str(tmp_path / "moments"),
-        "ckpt": str(tmp_path / "ckpt"),
-    }
-    q = pca_moments_stream(
-        spark, landing, moments_dir=dirs["moments"],
-        checkpoint_dir=dirs["ckpt"], available_now=True,
-    )
-    q.awaitTermination(120)
-    land("b.jsonl", [(150 + j, row) for j, row in enumerate(X[150:])])
-    q = pca_moments_stream(
-        spark, landing, moments_dir=dirs["moments"],
-        checkpoint_dir=dirs["ckpt"], available_now=True,
-    )
-    q.awaitTermination(120)
-
-    streamed = solve_pca(load_streamed_moments(spark, dirs["moments"]), 3, iters=20)
-    full = train_pca(_df(spark, X), "embedding", 3, iters=20)
-    assert streamed.n_rows == full.n_rows == 240
-    assert np.allclose(streamed.eigenvalues, full.eigenvalues, atol=1e-9)
-    assert np.allclose(streamed.components, full.components, atol=1e-8)
-
-    # crash replay: re-ingesting a batch under its OWN id is a no-op for
-    # the merged total (dynamic overwrite replaces its partition)
-    replay = spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(X[:150])],
-        "vec_id long, embedding array<float>",
-    )
-    before = load_streamed_moments(spark, dirs["moments"])
-    ingest_moments_batch(replay, 0, "embedding", dirs["moments"])
-    after = load_streamed_moments(spark, dirs["moments"])
-    assert after.n == before.n == 240
-    # the replayed frame partitions differently, so partial summation
-    # order may differ at float epsilon — but never double-count
-    assert np.allclose(np.asarray(after.o), np.asarray(before.o), rtol=1e-12)
-
-
 def test_ragged_and_wrong_dim_guards(spark):
     """The kernels get the same loud named-failure treatment as
     assign_cells (r11 VERDICT #1): a ragged vector in a PCA fit or
@@ -374,72 +310,6 @@ def test_ragged_and_wrong_dim_guards(spark):
     bad = PCAMoments(n=m.n, s=m.s, o=np.zeros((3, 3)))
     with pytest.raises(ValueError, match="second-moment"):
         m.merge(bad)
-
-
-def test_compact_streamed_moments(spark, tmp_path):
-    """Long-running-stream hygiene: per-batch moment partitions older
-    than the replay horizon fold into ONE consolidated partial (the
-    moments are additive), totals bit-stable; an interrupted GC (a
-    folded partition still on disk) is skipped via the covers marker,
-    never double-counted; re-running compaction finishes the GC."""
-    import glob
-
-    from youtube_analytics_lakehouse_databricks_spark.streaming.pca_stream import (
-        compact_streamed_moments,
-        ingest_moments_batch,
-        load_streamed_moments,
-    )
-
-    X = _planted(n=200, d=8, seed=29)
-    mdir = str(tmp_path / "moments")
-
-    def batch_df(idx):
-        return spark.createDataFrame(
-            [(int(i), [float(x) for x in X[i]]) for i in idx],
-            "vec_id long, embedding array<float>",
-        )
-
-    chunks = np.array_split(np.arange(200), 10)
-    for bid, idx in enumerate(chunks):
-        ingest_moments_batch(batch_df(idx), bid, "embedding", mdir)
-    before = load_streamed_moments(spark, mdir)
-    assert before.n == 200
-
-    assert compact_streamed_moments(spark, mdir, keep_latest=3) == 7
-    parts = glob.glob(f"{mdir}/batch_id=*")
-    assert len(parts) == 4  # consolidated(id 0) + live batches 7, 8, 9
-    after = load_streamed_moments(spark, mdir)
-    assert after.n == 200
-    assert np.allclose(np.asarray(after.s), np.asarray(before.s), rtol=1e-12)
-    assert np.allclose(np.asarray(after.o), np.asarray(before.o), rtol=1e-12)
-
-    # interrupted GC: a folded partition resurfaces (crash between the
-    # consolidated write and its delete) -> the marker skips it
-    ingest_moments_batch(batch_df(chunks[3]), 3, "embedding", mdir)
-    mid = load_streamed_moments(spark, mdir)
-    assert mid.n == 200
-    # fold-vs-fold lock: the moments are ADDITIVE, so concurrent folds
-    # could double-count — a held lock refuses (named)
-    import os as _os
-
-    import pytest as _pytest
-
-    with open(f"{mdir}/.compact_lock", "w") as f:
-        f.write("compact_streamed_moments")
-    with _pytest.raises(ValueError, match="another fold holds the lock"):
-        compact_streamed_moments(spark, mdir, keep_latest=3)
-    _os.remove(f"{mdir}/.compact_lock")
-
-    # re-running compaction garbage-collects it without shrinking the
-    # horizon (covers stays at the prior consolidation's max)
-    assert compact_streamed_moments(spark, mdir, keep_latest=3) == 2
-    fin = load_streamed_moments(spark, mdir)
-    assert fin.n == 200
-    assert np.allclose(np.asarray(fin.o), np.asarray(before.o), rtol=1e-12)
-
-    # frontier replay stays exactly-once after compaction
-    ingest_moments_batch(batch_df(chunks[9]), 9, "embedding", mdir)
-    assert load_streamed_moments(spark, mdir).n == 200
 
 
 def test_composes_with_ivf_ann(spark):

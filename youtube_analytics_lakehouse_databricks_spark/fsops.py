@@ -1,5 +1,4 @@
-"""Scheme-safe driver-side filesystem toolkit for index and stream
-maintenance.
+"""Scheme-safe driver-side filesystem toolkit for index maintenance.
 
 Every driver-side filesystem touch in the engine routes through one of
 two contracts defined here, so a maintenance call pointed at an
@@ -26,29 +25,15 @@ would wave through exactly the corruption it exists to prevent):
   Correct-by-fallback callers (e.g. ``watermark_of``) use
   ``is_local_path`` and take their scheme-safe Spark path.
 
-The module also hosts the shared compaction skeleton the streaming
-artifacts' maintenance builds on (``batch_partition_ids`` +
-``StagedFold``), so the next streamed artifact doesn't hand-roll a
-fourth crash-recovery protocol. Two commit disciplines exist by design:
-
-- **stage-and-swap** (``StagedFold``; used by
-  ``streaming.ann_stream.compact_ann_stream``): consolidated data
-  stages under a dot-directory readers ignore, a manifest + completion
-  marker commit the fold (both written temp -> hsync -> atomic rename,
-  so a PRESENT marker implies a READABLE manifest even across power
-  loss), and recovery finishes or discards. Crash-recoverable, not
-  reader-atomic — a maintenance window operation.
-- **add-first GC** (``compact_audit_log``, ``compact_streamed_moments``):
-  the consolidated rows are written — and made self-describing
-  (latest-wins dominance / a ``covers`` marker) — BEFORE anything is
-  deleted, so every prefix of the sequence is value-stable for
-  concurrent readers and the deletes are pure garbage collection. No
-  marker file needed; a crash leaves re-foldable residue at worst.
-
-Stage-and-swap is for layouts whose readers cannot tolerate duplicate
-rows (an ANN corpus partition); add-first is strictly safer when the
-read path reconciles duplicates anyway (latest-wins logs, additive
-moments) and should be preferred for new artifacts when it applies.
+The module also hosts the compaction skeleton, ``StagedFold`` plus
+``maintenance_lock``; its one user is ``ivf_index.compact_ivf_index``.
+The fold is **stage-and-swap**: consolidated data stages under a
+dot-directory readers ignore, a manifest + completion marker commit
+the fold (both written temp -> hsync -> atomic rename, so a PRESENT
+marker implies a READABLE manifest even across power loss), and
+recovery finishes or discards. Crash-recoverable, not reader-atomic —
+a maintenance window operation, for layouts whose readers cannot
+tolerate duplicate rows (an ANN corpus partition).
 """
 
 from __future__ import annotations
@@ -145,7 +130,7 @@ def is_local_path(path: str) -> bool:
 
 
 class DriverFS:
-    """Driver-side Hadoop FileSystem handle for index/stream maintenance.
+    """Driver-side Hadoop FileSystem handle for index maintenance.
 
     One instance per (session, root) — construction resolves the root's
     FileSystem once (Hadoop caches instances per scheme+authority) and
@@ -223,18 +208,14 @@ class DriverFS:
     def mkdirs(self, p: str) -> None:
         self._fs.mkdirs(self._path(p))
 
-    def list_parquet_files(self, p: str) -> list[str]:
-        """All ``.parquet`` file paths under ``p`` (recursive), pruning
-        hidden (dot/underscore) segments BEFORE descending — the same
-        names Spark's readers ignore, so a staged compaction fold or a
-        ``_MANIFEST`` never counts toward an audit. [] when absent."""
-        return [path for path, _size in self.list_parquet_files_with_size(p)]
-
     def list_parquet_files_with_size(self, p: str) -> list[tuple[str, int]]:
-        """``list_parquet_files`` plus each file's byte length from the
-        SAME ``listStatus`` round-trip — so size-aware walkers (the
-        footer counter's whole-file-vs-positional split) don't pay a
-        second ``getFileStatus`` per file. [] when absent."""
+        """All ``.parquet`` file paths under ``p`` (recursive) with each
+        file's byte length from the SAME ``listStatus`` round-trip — so
+        size-aware walkers (the footer counter's whole-file-vs-positional
+        split) don't pay a second ``getFileStatus`` per file. Hidden
+        (dot/underscore) segments are pruned BEFORE descending — the
+        same names Spark's readers ignore, so a staged compaction fold
+        or a ``_MANIFEST`` never counts. [] when absent."""
         if not self.isdir(p):
             return []
         out: list[tuple[str, int]] = []
@@ -535,13 +516,10 @@ def maintenance_lock(
     exclusive-create ``.compact_lock`` under the artifact, held for the
     whole maintenance call and released on EVERY exit path (so an
     exception-path failure never strands it — only a process death
-    does, and the refusal names the file). Why every compaction takes
-    it, not just stage-and-swap: a concurrent stage-and-swap fold's
-    recover() can re-apply a committed manifest mid-swap and delete the
-    freshly swapped-in only copy (data loss); concurrent ADD-FIRST
-    folds share a fixed temp location and, for the additive moments
-    artifact, could land two ``covers`` rows that a loader would both
-    count. The lock converts every such interleaving into one named,
+    does, and the refusal names the file). Why the fold takes it: a
+    concurrent stage-and-swap fold's recover() can re-apply a committed
+    manifest mid-swap and delete the freshly swapped-in only copy (data
+    loss). The lock converts every such interleaving into one named,
     wait-and-rerun error.
 
     Exclusivity, stated precisely: ``create_exclusive`` is atomic on
@@ -668,19 +646,18 @@ def require_session(spark, path: str, op: str):
     return spark
 
 
-def batch_partition_ids(
-    fs: DriverFS, directory: str, prefix: str = "batch_id="
-) -> list[int]:
-    """Sorted numeric partition ids under ``directory`` (the streamed
-    artifacts' shared ``batch_id=K`` layout); [] when absent."""
+def batch_partition_ids(fs: DriverFS, directory: str) -> list[int]:
+    """Sorted numeric ``batch_id=K`` partition ids under ``directory``
+    (the layout earlier versions' streamed artifacts wrote); [] when
+    absent."""
     return sorted(
-        int(n.split("=", 1)[1]) for n in fs.listnames(directory, prefix=prefix)
+        int(n.split("=", 1)[1]) for n in fs.listnames(directory, prefix="batch_id=")
     )
 
 
 class StagedFold:
     """The stage -> commit -> apply/recover state machine for swap-style
-    compaction (see the module docstring for when to prefer add-first).
+    compaction (see the module docstring).
 
     Protocol, in order:
     1. caller writes consolidated data under ``stage_dir`` (a
@@ -698,9 +675,9 @@ class StagedFold:
     MANIFEST = "_MANIFEST"
     MARKER = "_COMPLETE"
 
-    def __init__(self, fs: DriverFS, parent_dir: str, tmp_name: str = ".compact_tmp"):
+    def __init__(self, fs: DriverFS, parent_dir: str):
         self.fs = fs
-        self.stage_dir = f"{parent_dir}/{tmp_name}"
+        self.stage_dir = f"{parent_dir}/.compact_tmp"
 
     def recover(self) -> dict | None:
         if self.fs.exists(f"{self.stage_dir}/{self.MARKER}"):

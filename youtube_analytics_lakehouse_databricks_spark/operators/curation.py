@@ -392,7 +392,7 @@ def curate(
     # semi-join dim*4 bytes/row of vectors against a corpus-sized key
     # set, a full vector shuffle at 100 TB, where the extra matmuls for
     # already-dropped docs are bounded (<2x) and exchange-free.
-    # MEASURED (tools/decontam_gate_shape_probe.py): ~13x less gate
+    # MEASURED (r11; COVERAGE.md, "Decontamination" row): ~13x less gate
     # exchange at both probe decades AND lower CPU/wall — the extra
     # matmuls cost less than shuffling vectors. (The SemDeDup stage
     # below rightly does restrict its vector frame — ITS downstream

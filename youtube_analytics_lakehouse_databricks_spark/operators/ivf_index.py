@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from youtube_analytics_lakehouse_databricks_spark.fsops import (
     COMPACT_LOCK_NAME as _FOLD_LOCK_NAME,
     DriverFS,
+    batch_partition_ids,
     driver_read_parquet,
     is_local_path,
     local_path_or_raise,
@@ -197,7 +198,6 @@ def build_ivf_index(
     max_cluster_size: int = 8192,
     bucket_table: str | None = None,
     n_buckets: int = 32,
-    write_corpus: bool = True,
 ) -> None:
     """Train the quantizer (deterministic mini-Lloyd on a bounded
     lowest-id sample) and materialize the cell-partitioned corpus.
@@ -215,11 +215,6 @@ def build_ivf_index(
     trade. The table name lands in the index meta so append/search
     discover it."""
     _require_long_id(df, id_col, "build_ivf_index")
-    if bucket_table is not None and not write_corpus:
-        raise ValueError(
-            "build_ivf_index: bucket_table requires write_corpus=True — "
-            "there is no corpus to bucket"
-        )
     spark = df.sparkSession
     if n_cells is None:
         n_cells = auto_n_cells(df.count(), max_cluster_size)
@@ -228,17 +223,16 @@ def build_ivf_index(
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cell int, v array<double>",
     ).write.mode("overwrite").parquet(f"{path}/centroids")
-    if write_corpus:
-        assigned = assign_cells(df, id_col, vec_col, centroids)
-        corpus = assigned.select(id_col, "v", F.col("cluster").alias("cell"))
-        corpus.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/corpus")
-        if bucket_table is not None:
-            (
-                corpus.write.mode("overwrite")
-                .format("parquet")
-                .bucketBy(int(n_buckets), "cell")
-                .saveAsTable(bucket_table)
-            )
+    assigned = assign_cells(df, id_col, vec_col, centroids)
+    corpus = assigned.select(id_col, "v", F.col("cluster").alias("cell"))
+    corpus.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/corpus")
+    if bucket_table is not None:
+        (
+            corpus.write.mode("overwrite")
+            .format("parquet")
+            .bucketBy(int(n_buckets), "cell")
+            .saveAsTable(bucket_table)
+        )
     spark.createDataFrame(
         [(id_col, bucket_table, int(n_buckets))],
         "id_col string, bucket_table string, n_buckets int",
@@ -318,20 +312,21 @@ def _corpus_rows(corpus_dir: str, spark=None) -> int:
     return driver_parquet_row_count(spark, corpus_dir, "ivf corpus row count")
 
 
-def _require_batch_layout_absent(spark: SparkSession, corpus_dir: str, op: str) -> None:
-    """Batch appends write cell=J at the top level; a STREAMED index's
-    corpus is laid out batch_id=K/cell=J (streaming/ann_stream.py).
-    Mixing the two in one directory breaks parquet partition discovery
-    on the next read — fail loudly with the right tool instead. Routed
-    through DriverFS: on an unreachable scheme the guard RAISES rather
-    than silently seeing no directory (the corruption it exists to
-    prevent would otherwise land unguarded)."""
-    if DriverFS(spark, corpus_dir, op).listnames(corpus_dir, prefix="batch_id="):
+def _require_batch_layout_absent(fs: DriverFS, corpus_dir: str, op: str) -> None:
+    """Refuse a corpus laid out ``batch_id=K/cell=J`` (the layout earlier
+    versions' streamed ingest wrote). This module appends, folds and
+    audits top-level ``cell=J`` partitions only: mixing the two in one
+    directory breaks parquet partition discovery on the next read, and
+    a fold or audit that ignored the ``batch_id`` level would misread
+    the corpus. Routed through DriverFS: on an unreachable scheme the
+    guard RAISES rather than silently seeing no directory (the
+    corruption it exists to prevent would otherwise land unguarded)."""
+    if batch_partition_ids(fs, corpus_dir):
         raise ValueError(
-            f"{op}: {corpus_dir} is a STREAMED index layout "
-            "(batch_id=K/cell=J partitions) — batch appends would corrupt "
-            "its partition discovery; ingest through "
-            "streaming.ann_stream.ingest_ann_batch instead"
+            f"{op}: {corpus_dir} holds batch_id=K/cell=J partitions, a "
+            "layout this index does not append to, fold or audit; rebuild "
+            "it from the source vectors with build_ivf_index or "
+            "build_ivfpq_index"
         )
 
 
@@ -386,6 +381,7 @@ def _append_window(spark: SparkSession, corpus_dir: str, op: str):
     from youtube_analytics_lakehouse_databricks_spark.fsops import StagedFold
 
     fs = DriverFS(spark, corpus_dir, op)
+    _require_batch_layout_absent(fs, corpus_dir, op)
     stage = StagedFold(fs, corpus_dir).stage_dir
     if fs.isdir(stage):
         _raise_pending_fold(corpus_dir, stage, op)
@@ -536,7 +532,6 @@ def append_ivf_index(df: DataFrame, id_col: str, vec_col: str, path: str) -> Non
     fold refuses past — appending into cell dirs the fold is about to
     replace would silently lose the batch (see ``_append_window``)."""
     _require_long_id(df, id_col, "append_ivf_index")
-    _require_batch_layout_absent(df.sparkSession, f"{path}/corpus", "append_ivf_index")
     with _append_window(df.sparkSession, f"{path}/corpus", "append_ivf_index"):
         centroids = load_ivf_centroids(path, df.sparkSession)
         assigned = assign_cells(df, id_col, vec_col, centroids)
@@ -762,8 +757,8 @@ def ivf_cell_stats(
     """(cell, n_rows, frac, skew): per-cell occupancy of the persisted
     corpus — the drift detector for the frozen-quantizer contract.
 
-    ``append_ivf_index``/``append_ivfpq_index``/streamed ingestion all
-    assign into FROZEN cells, so a corpus whose distribution drifts
+    ``append_ivf_index``/``append_ivfpq_index`` both assign into FROZEN
+    cells, so a corpus whose distribution drifts
     piles into few of them. Occupancy skew is exactly what degrades
     serving at scale: a probed hot cell dominates the pruned scan's
     bytes, and the distributed searches' per-cell kernel materializes
@@ -777,18 +772,17 @@ def ivf_cell_stats(
     cell scans nothing and finds nothing — rather than memory or
     recall; their count is n_cells minus this frame's rows).
 
-    Works on all three layouts (flat, compressed, streamed — sniffed
-    like the compaction does); one count aggregation over the cell
-    partition column, no vector/code bytes read."""
+    Works on both layouts (flat and compressed, sniffed like the
+    compaction does); one count aggregation over the cell partition
+    column, no vector/code bytes read."""
     fs = DriverFS(spark, path, "ivf_cell_stats")
     corpus_dir = (
         f"{path}/corpus_pq" if fs.isdir(f"{path}/corpus_pq") else f"{path}/corpus"
     )
     if not fs.isdir(corpus_dir):
         raise ValueError(
-            f"ivf_cell_stats: no corpus under {path} — the index was "
-            "built with write_corpus=False (streaming bootstrap) and "
-            "nothing has been ingested yet"
+            f"ivf_cell_stats: no corpus under {path} — wrong index "
+            "path, or its corpus was removed"
         )
     # centroid count from the KB-sized artifact driver-side — still
     # scheme-safe (load_ivf_centroids is two-branched since r14: pyarrow
@@ -829,16 +823,13 @@ def compact_ivf_index(
     while the DATA doesn't. Only cells holding more than
     ``max_files_per_cell`` files rewrite; returns the number of
     cells folded (0 = nothing to do). Works on both persisted layouts
-    (flat ``corpus/`` and compressed ``corpus_pq/``, sniffed); streamed
-    indexes fold with ``compact_ann_stream`` instead — named error
-    here.
+    (flat ``corpus/`` and compressed ``corpus_pq/``, sniffed); a
+    ``batch_id=K/cell=J`` corpus raises the named layout error.
 
     Safety contract: maintenance window, crash-RECOVERABLE, not
     reader-atomic — the ``fsops.StagedFold`` stage-and-swap protocol.
-    STRICTER than ``compact_ann_stream`` on one point: concurrent
-    APPENDS are NOT safe here (streamed ingest lands in new
-    ``batch_id`` dirs the fold never touches; batch appends land in
-    the very ``cell=K`` dirs the fold deletes and replaces, so rows
+    Concurrent APPENDS are NOT safe here (batch appends land in the
+    very ``cell=K`` dirs the fold deletes and replaces, so rows
     appended between the consolidation read and the swap would be
     lost) — quiesce writers for the window. Since r15 the window is
     ENFORCED in both directions, not just documented, and CLOSED on
@@ -876,15 +867,9 @@ def compact_ivf_index(
             f"compact_ivf_index: no corpus under {path} — wrong index "
             "path, or a bootstrap that never ingested"
         )
-    from youtube_analytics_lakehouse_databricks_spark.fsops import StagedFold, batch_partition_ids
+    from youtube_analytics_lakehouse_databricks_spark.fsops import StagedFold
 
-    if batch_partition_ids(fs, corpus_dir):
-        raise ValueError(
-            f"compact_ivf_index: {corpus_dir} is a STREAMED index layout "
-            "(batch_id=K/cell=J partitions) — fold it with "
-            "streaming.ann_stream.compact_ann_stream, which respects the "
-            "stream's replay horizon"
-        )
+    _require_batch_layout_absent(fs, corpus_dir, "compact_ivf_index")
     staging = StagedFold(fs, corpus_dir)
 
     def finish(manifest: dict) -> int:
@@ -1077,11 +1062,9 @@ def index_health(
     Costs ONE Spark aggregation over the cell partition column (shared
     by skew/empty/divergence-dir-side) plus one bucket-table count when
     bucketed; file counts are driver-side listings. Works on flat and
-    compressed layouts (sniffed); STREAMED indexes raise the named
-    error (their maintenance and audit live in
-    ``streaming.ann_stream``, whose replay horizon these checks don't
-    model)."""
-    from youtube_analytics_lakehouse_databricks_spark.fsops import StagedFold, batch_partition_ids
+    compressed layouts (sniffed); a ``batch_id=K/cell=J`` corpus
+    raises the named layout error."""
+    from youtube_analytics_lakehouse_databricks_spark.fsops import StagedFold
 
     fs = DriverFS(spark, path, "index_health")
     corpus_dir = (
@@ -1092,13 +1075,7 @@ def index_health(
             f"index_health: no corpus under {path} — wrong index path, "
             "or a bootstrap that never ingested"
         )
-    if batch_partition_ids(fs, corpus_dir):
-        raise ValueError(
-            f"index_health: {corpus_dir} is a STREAMED index layout "
-            "(batch_id=K/cell=J partitions) — its maintenance and audit "
-            "live in streaming.ann_stream (compact_ann_stream respects "
-            "the replay horizon these checks don't model)"
-        )
+    _require_batch_layout_absent(fs, corpus_dir, "index_health")
 
     rows: list[tuple[str, bool, str, str]] = []
 
@@ -1282,10 +1259,9 @@ def clear_stale_markers(
     and this remediation's agree.
 
     Scans the markers where the protocol puts them: under the sniffed
-    corpus layout (``corpus_pq``/``corpus`` — batch and streamed alike)
-    and under ``path`` itself (a ``pca_stream`` moments dir hosts its
-    fold lock directly). Returns ``(marker, kind, age_sec)`` rows for
-    the deleted markers; empty = nothing to clear (healthy).
+    corpus layout (``corpus_pq``/``corpus``). Returns ``(marker, kind,
+    age_sec)`` rows for the deleted markers; empty = nothing to clear
+    (healthy).
 
     Honest limit (same as the manual steps this replaces): the
     fresh-marker check and the deletes are not one atomic step, so run
@@ -1300,9 +1276,7 @@ def clear_stale_markers(
             "or artifact path"
         )
     marker_dirs = [
-        d
-        for d in (f"{path}/corpus_pq", f"{path}/corpus", path)
-        if fs.isdir(d)
+        d for d in (f"{path}/corpus_pq", f"{path}/corpus") if fs.isdir(d)
     ]
     import time as _time
 
@@ -1397,7 +1371,6 @@ def build_ivfpq_index(
     pq_sample: int = 8192,
     bucket_table: str | None = None,
     n_buckets: int = 32,
-    write_corpus: bool = True,
 ) -> None:
     """Train the coarse quantizer AND per-subspace residual codebooks
     (both deterministic, both on the bounded lowest-id sample), then
@@ -1420,11 +1393,6 @@ def build_ivfpq_index(
     from youtube_analytics_lakehouse_databricks_spark.operators.pq import PQModel, _fit_codebooks
 
     _require_long_id(df, id_col, "build_ivfpq_index")
-    if bucket_table is not None and not write_corpus:
-        raise ValueError(
-            "build_ivfpq_index: bucket_table requires write_corpus=True — "
-            "there is no corpus to bucket"
-        )
     spark = df.sparkSession
     if n_cells is None:
         n_cells = auto_n_cells(df.count(), max_cluster_size)
@@ -1461,18 +1429,15 @@ def build_ivfpq_index(
         )
     )
     model.save(spark, f"{path}/pq_model")
-    if write_corpus:
-        codes = _encode_ivfpq(df, id_col, vec_col, centroids, model.codebooks)
-        codes.write.mode("overwrite").partitionBy("cell").parquet(
-            f"{path}/corpus_pq"
+    codes = _encode_ivfpq(df, id_col, vec_col, centroids, model.codebooks)
+    codes.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/corpus_pq")
+    if bucket_table is not None:
+        (
+            codes.write.mode("overwrite")
+            .format("parquet")
+            .bucketBy(int(n_buckets), "cell")
+            .saveAsTable(bucket_table)
         )
-        if bucket_table is not None:
-            (
-                codes.write.mode("overwrite")
-                .format("parquet")
-                .bucketBy(int(n_buckets), "cell")
-                .saveAsTable(bucket_table)
-            )
     spark.createDataFrame(
         [(id_col, bucket_table, int(n_buckets))],
         "id_col string, bucket_table string, n_buckets int",
@@ -1553,9 +1518,6 @@ def append_ivfpq_index(df: DataFrame, id_col: str, vec_col: str, path: str) -> N
     from youtube_analytics_lakehouse_databricks_spark.operators.pq import PQModel
 
     _require_long_id(df, id_col, "append_ivfpq_index")
-    _require_batch_layout_absent(
-        df.sparkSession, f"{path}/corpus_pq", "append_ivfpq_index"
-    )
     with _append_window(df.sparkSession, f"{path}/corpus_pq", "append_ivfpq_index"):
         centroids = load_ivf_centroids(path, df.sparkSession)
         model = PQModel.load(f"{path}/pq_model", df.sparkSession)

@@ -51,8 +51,7 @@ __all__ = [
 def _kinded_rows(kinds: dict) -> list:
     """Encode arrays into the shared (kind, idx, vals) row layout: a kind
     maps to a vector (stored at idx 0) or a matrix (one row per idx).
-    One codec for every PCA artifact — PCAModel, PCAMoments, and the
-    streaming per-batch partials (streaming/pca_stream.py)."""
+    One codec for every PCA artifact — PCAModel and PCAMoments."""
     import numpy as np
 
     rows = []
@@ -310,8 +309,8 @@ def solve_pca(moments: PCAMoments, k: int, *, iters: int = 20) -> PCAModel:
     cancels catastrophically when ||mean||^2 dominates the variance —
     trailing eigenvalues/components of a HIGH-OFFSET (far-from-centered)
     embedding space can lose most of their float64 precision. This is
-    the deliberate price of ADDITIVE moments (the append-only refit and
-    streaming paths need them); typical learned embeddings are
+    the deliberate price of ADDITIVE moments (the append-only refit
+    needs them); typical learned embeddings are
     near-centered, where the identity is well-conditioned. For a corpus
     with a large known offset, subtract a fixed provisional center from
     the vectors before compute_moments and add it back to model.mean —
