@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
 
 import numpy as np
 import pytest
@@ -24,8 +23,6 @@ import pytest
 from youtube_analytics_lakehouse_databricks_spark.fsops import (
     DriverFS,
     RemotePathError,
-    StagedFold,
-    batch_partition_ids,
     is_local_path,
     local_path_or_raise,
 )
@@ -94,13 +91,11 @@ def test_driverfs_unreachable_scheme_raises_named(spark):
 def test_driverfs_basic_ops_and_committed_write(spark, tmp_path):
     fs = DriverFS(spark, str(tmp_path), "test")
     d = f"{tmp_path}/d"
-    fs.mkdirs(f"{d}/batch_id=3")
-    fs.mkdirs(f"{d}/batch_id=1")
-    fs.mkdirs(f"{d}/other")
+    for sub in ("a", "b", "other"):
+        os.makedirs(f"{d}/{sub}")
     assert fs.isdir(d) and not fs.isdir(f"{d}/nope")
     assert fs.listnames(f"{d}/nope") == []  # absent dir lists empty, local
-    assert sorted(fs.listnames(d)) == ["batch_id=1", "batch_id=3", "other"]
-    assert batch_partition_ids(fs, d) == [1, 3]
+    assert sorted(fs.listnames(d)) == ["a", "b", "other"]
     # committed write is atomic into place: no .inprogress residue, full content
     fs.write_text_committed(f"{d}/m.json", json.dumps({"a": [1, 2]}))
     assert not os.path.exists(f"{d}/m.json.inprogress")
@@ -114,13 +109,13 @@ def test_driverfs_basic_ops_and_committed_write(spark, tmp_path):
 
 def test_rename_refuses_occupied_destination(spark, tmp_path):
     """Hadoop's rename(src, existingDir) moves src INTO the directory —
-    the silent-nesting hazard (r13 ADVICE, medium): a compaction whose
-    delete left the old partition alive would nest the staged fold
+    the silent-nesting hazard (r13 ADVICE, medium): a staged swap whose
+    delete left the old directory alive would nest the staged copy
     inside it, duplicating every row. DriverFS.rename refuses instead,
     like the os.rename it replaced."""
     fs = DriverFS(spark, str(tmp_path), "test")
-    fs.mkdirs(f"{tmp_path}/old/sub")
-    fs.mkdirs(f"{tmp_path}/staged")
+    os.makedirs(f"{tmp_path}/old/sub")
+    os.makedirs(f"{tmp_path}/staged")
     with pytest.raises(IOError, match="already exists"):
         fs.rename(f"{tmp_path}/staged", f"{tmp_path}/old")
     # nothing moved, nothing nested
@@ -131,24 +126,6 @@ def test_rename_refuses_occupied_destination(spark, tmp_path):
     assert fs.read_text(f"{tmp_path}/m.json") == "v2"
 
 
-def test_stagedfold_state_machine(spark, tmp_path):
-    fs = DriverFS(spark, str(tmp_path), "test")
-    parent = f"{tmp_path}/corpus"
-    fs.mkdirs(parent)
-    fold = StagedFold(fs, parent)
-    # uncommitted leftovers (no marker) are discarded by recover()
-    fs.mkdirs(f"{fold.stage_dir}/batch_id=0")
-    assert fold.recover() is None
-    assert not fs.isdir(fold.stage_dir)
-    # commit -> marker present implies readable manifest (atomic writes)
-    fs.mkdirs(fold.stage_dir)
-    fold.commit({"fold": [0, 1], "target": 0})
-    assert not os.path.exists(f"{fold.stage_dir}/_MANIFEST.inprogress")
-    assert fold.recover() == {"fold": [0, 1], "target": 0}
-    fold.cleanup()
-    assert fold.recover() is None
-
-
 # --- hardened call sites: named error on unreachable schemes ----------------
 
 
@@ -157,13 +134,6 @@ def test_ivf_search_remote_raises(spark):
 
     with pytest.raises(RemotePathError, match="load_ivf_centroids"):
         ivf_search(spark, NOSUCH, _df(spark, n=4), "vec_id", "embedding")
-
-
-def test_append_ivf_index_remote_raises(spark):
-    from youtube_analytics_lakehouse_databricks_spark.operators.ivf_index import append_ivf_index
-
-    with pytest.raises(RemotePathError, match="append_ivf_index"):
-        append_ivf_index(_df(spark), "vec_id", "embedding", NOSUCH)
 
 
 def test_ivfpq_refined_footer_checks_unreachable_raise(spark, tmp_path):
@@ -269,24 +239,19 @@ def test_local_path_property_scheme_detection():
 
 
 def test_batch_index_lifecycle_on_file_uri_flat(spark, tmp_path):
-    """build -> append -> search (collected + distributed) -> cell stats,
-    all addressed by a ``file:`` URI: the centroid/meta artifact reads
-    really route through the Hadoop FileSystem (r14 object-store-native
-    serving) — results identical to the same index addressed by its os
-    path."""
+    """build -> search -> row total, all addressed by a ``file:`` URI:
+    the centroid artifact reads really route through the Hadoop
+    FileSystem (r14 object-store-native serving) — results identical to
+    the same index addressed by its os path."""
     from youtube_analytics_lakehouse_databricks_spark.operators.ivf_index import (
-        append_ivf_index,
+        _corpus_rows,
         build_ivf_index,
-        ivf_cell_stats,
         ivf_search,
-        ivf_search_distributed,
     )
 
     df = _df(spark, n=90)
-    extra = _df(spark, n=30, start=90, seed=11)
     uri = f"file:{tmp_path}/flat_idx"
     build_ivf_index(df, "vec_id", "embedding", uri, n_cells=4, kmeans_iters=2)
-    append_ivf_index(extra, "vec_id", "embedding", uri)
     queries = df.filter("vec_id < 5")
     via_uri = ivf_search(
         spark, uri, queries, "vec_id", "embedding", n_probe=2, k=5
@@ -297,39 +262,29 @@ def test_batch_index_lifecycle_on_file_uri_flat(spark, tmp_path):
     ).collect()
     key = lambda r: (r["query_id"], r["rank"])
     assert sorted(via_uri, key=key) == sorted(via_os, key=key)
-    dist = ivf_search_distributed(
-        spark, uri, queries, "vec_id", "embedding", n_probe=2, k=5
-    ).collect()
-    assert sorted(dist, key=key) == sorted(via_os, key=key)
-    stats = ivf_cell_stats(spark, uri).collect()
-    assert sum(r["n_rows"] for r in stats) == 120
+    assert _corpus_rows(f"{uri}/corpus", spark) == 90
 
 
 def test_batch_index_lifecycle_on_file_uri_compressed(spark, tmp_path):
     """The compressed layout's lifecycle through a ``file:`` URI:
-    build -> append -> adc search -> refined search (pq+flat pair both
-    URI-rooted) -> cell stats. Pins the PQModel/centroid/meta loads AND
-    the refined pair validation on the Hadoop-FS route."""
+    build -> adc search -> refined search (pq+flat pair both URI-rooted)
+    -> row total. Pins the PQModel/centroid loads AND the refined pair
+    validation on the Hadoop-FS route."""
     from youtube_analytics_lakehouse_databricks_spark.operators.ivf_index import (
-        append_ivf_index,
-        append_ivfpq_index,
+        _corpus_rows,
         build_ivf_index,
         build_ivfpq_index,
-        ivf_cell_stats,
         ivfpq_search,
         ivfpq_search_refined,
     )
 
     df = _df(spark, n=90)
-    extra = _df(spark, n=30, start=90, seed=11)
     pq_uri = f"file:{tmp_path}/pq_idx"
     flat_uri = f"file:{tmp_path}/flat_idx"
     build_ivfpq_index(
         df, "vec_id", "embedding", pq_uri, n_cells=4, kmeans_iters=2, m=4
     )
     build_ivf_index(df, "vec_id", "embedding", flat_uri, n_cells=4, kmeans_iters=2)
-    append_ivfpq_index(extra, "vec_id", "embedding", pq_uri)
-    append_ivf_index(extra, "vec_id", "embedding", flat_uri)
     queries = df.filter("vec_id < 5")
     adc_uri = ivfpq_search(
         spark, pq_uri, queries, "vec_id", "embedding", n_probe=2, k=5
@@ -345,8 +300,7 @@ def test_batch_index_lifecycle_on_file_uri_compressed(spark, tmp_path):
         n_probe=2, refine=20, k=5,
     ).collect()
     assert len(refined) == 25
-    stats = ivf_cell_stats(spark, pq_uri).collect()
-    assert sum(r["n_rows"] for r in stats) == 120
+    assert _corpus_rows(f"{pq_uri}/corpus_pq", spark) == 90
 
 
 def test_remote_route_success_paths_bit_identical(spark, tmp_path, monkeypatch):
@@ -354,7 +308,7 @@ def test_remote_route_success_paths_bit_identical(spark, tmp_path, monkeypatch):
     the ``file:`` lifecycles above take the LOCAL fast path by design
     (``is_local_path('file:...')`` is True), so this test forces the
     non-local route (``driver_read_parquet`` / ``DriverFS.read_bytes``
-    artifact streaming, Spark-count row totals, remote refined-pair
+    artifact streaming, footer-walk row totals, remote refined-pair
     validation) onto paths the session's Hadoop FS can actually reach
     (the default file:/// filesystem) and pins bit-identical results
     against the local route on the same indexes."""
@@ -363,7 +317,6 @@ def test_remote_route_success_paths_bit_identical(spark, tmp_path, monkeypatch):
     from youtube_analytics_lakehouse_databricks_spark.operators.pq import PQModel
 
     df = _df(spark, n=90)
-    extra = _df(spark, n=30, start=90, seed=11)
     flat, pqp = f"{tmp_path}/flat", f"{tmp_path}/pq"
     ivf.build_ivf_index(df, "vec_id", "embedding", flat, n_cells=4, kmeans_iters=2)
     ivf.build_ivfpq_index(
@@ -377,9 +330,6 @@ def test_remote_route_success_paths_bit_identical(spark, tmp_path, monkeypatch):
         # pq/curation import inside the function bodies (= fsops)
         m.setattr(fsops, "is_local_path", lambda p: False)
         m.setattr(ivf, "is_local_path", lambda p: False)
-        # appends load the frozen state through the Hadoop route
-        ivf.append_ivf_index(extra, "vec_id", "embedding", flat)
-        ivf.append_ivfpq_index(extra, "vec_id", "embedding", pqp)
         remote_flat = ivf.ivf_search(
             spark, flat, queries, "vec_id", "embedding", n_probe=2, k=5
         ).collect()
@@ -387,7 +337,7 @@ def test_remote_route_success_paths_bit_identical(spark, tmp_path, monkeypatch):
             spark, pqp, queries, "vec_id", "embedding", n_probe=2, k=5
         ).collect()
         # refined pair validation: centroid equality via streamed
-        # artifacts + row counts via the Spark-count fallback
+        # artifacts + row counts via the footer walk
         remote_refined = ivf.ivfpq_search_refined(
             spark, pqp, flat, queries, "vec_id", "embedding",
             n_probe=2, refine=20, k=5, validate=True,
@@ -395,7 +345,7 @@ def test_remote_route_success_paths_bit_identical(spark, tmp_path, monkeypatch):
         remote_rows = ivf._corpus_rows(f"{flat}/corpus", spark)
         pq_model = PQModel.load(f"{pqp}/pq_model", spark)
 
-    # local route over the SAME (appended) indexes
+    # local route over the SAME indexes
     local_flat = ivf.ivf_search(
         spark, flat, queries, "vec_id", "embedding", n_probe=2, k=5
     ).collect()
@@ -409,7 +359,7 @@ def test_remote_route_success_paths_bit_identical(spark, tmp_path, monkeypatch):
     assert sorted(remote_flat, key=key) == sorted(local_flat, key=key)
     assert sorted(remote_adc, key=key) == sorted(local_adc, key=key)
     assert sorted(remote_refined, key=key) == sorted(local_refined, key=key)
-    assert remote_rows == ivf._corpus_rows(f"{flat}/corpus") == 120
+    assert remote_rows == ivf._corpus_rows(f"{flat}/corpus") == 90
     assert np.array_equal(
         np.asarray(pq_model.codebooks),
         np.asarray(PQModel.load(f"{pqp}/pq_model").codebooks),
@@ -444,12 +394,12 @@ def test_write_text_committed_overwrite_is_atomic_replace(spark, tmp_path):
 def test_corpus_row_count_remote_route_is_footer_walk_zero_jobs(
     spark, tmp_path, monkeypatch
 ):
-    """check_bucket_table's remote row-count audit must cost FOOTER
+    """The refined search's remote row-count check must cost FOOTER
     reads, not a corpus scan: the forced non-local _corpus_rows route
     walks parquet footers driver-side through the Hadoop FS — total
-    matches the local pyarrow fast path, hidden segments (a staged
-    compaction fold) are excluded exactly like Spark's readers would,
-    and ZERO Spark jobs are submitted."""
+    matches the local pyarrow fast path, hidden segments (a dot-dir
+    staged copy) are excluded exactly like Spark's readers would, and
+    ZERO Spark jobs are submitted."""
     import shutil
 
     from pyspark.sql import functions as F
@@ -464,11 +414,11 @@ def test_corpus_row_count_remote_route_is_footer_walk_zero_jobs(
     local_total = ivf._corpus_rows(corpus)
     assert local_total == 120
 
-    # a staged fold under the corpus must NOT count toward the audit
-    os.makedirs(f"{corpus}/.compact_tmp/cell=0", exist_ok=True)
+    # a hidden staged copy under the corpus must NOT count
+    os.makedirs(f"{corpus}/.staged/cell=0", exist_ok=True)
     src_dir = f"{corpus}/cell=0"
     src = next(f for f in os.listdir(src_dir) if f.endswith(".parquet"))
-    shutil.copy(f"{src_dir}/{src}", f"{corpus}/.compact_tmp/cell=0/{src}")
+    shutil.copy(f"{src_dir}/{src}", f"{corpus}/.staged/cell=0/{src}")
 
     tracker = spark.sparkContext.statusTracker()
     with monkeypatch.context() as m:
@@ -486,65 +436,11 @@ def test_corpus_row_count_remote_route_is_footer_walk_zero_jobs(
     assert driver_parquet_row_count(spark, empty, "t") == 0
 
 
-def test_create_exclusive_and_maintenance_lock(spark, tmp_path):
-    """The fold-vs-fold primitives: create_exclusive refuses an existing
-    path (FileExistsError, race-free via the non-overwriting create);
-    maintenance_lock holds .compact_lock for the body, refuses a second
-    taker with the named error, and releases on success AND on the
-    exception path (so only a process death strands it)."""
-    from youtube_analytics_lakehouse_databricks_spark.fsops import maintenance_lock
-
-    fs = DriverFS(spark, str(tmp_path), "test")
-    p = f"{tmp_path}/token"
-    fs.create_exclusive(p, "one")
-    with pytest.raises(FileExistsError):
-        fs.create_exclusive(p, "two")
-
-    lock_path = f"{tmp_path}/.compact_lock"
-    with maintenance_lock(fs, str(tmp_path), "op_a"):
-        assert os.path.exists(lock_path)
-        with pytest.raises(ValueError, match="another fold holds the lock"):
-            with maintenance_lock(fs, str(tmp_path), "op_b"):
-                raise AssertionError("unreachable")
-    assert not os.path.exists(lock_path)  # released on success
-
-    with pytest.raises(RuntimeError, match="boom"):
-        with maintenance_lock(fs, str(tmp_path), "op_c"):
-            assert os.path.exists(lock_path)
-            raise RuntimeError("boom")
-    assert not os.path.exists(lock_path)  # released on the error path
-
-
-def test_maintenance_lock_readback_confirms_ownership(spark, tmp_path, monkeypatch):
-    """create_exclusive is atomic on HDFS but exists-check+create on the
-    local FS / S3A, so maintenance_lock CONFIRMS acquisition by reading
-    its unique token back: a caller whose create 'succeeded' but whose
-    content did not survive (the other racer's create truncated it)
-    backs off with the named error and must NOT delete the lock the
-    winner now owns."""
-    import youtube_analytics_lakehouse_databricks_spark.fsops as fsops
-    from youtube_analytics_lakehouse_databricks_spark.fsops import maintenance_lock
-
-    fs = DriverFS(spark, str(tmp_path), "test")
-    lock_path = f"{tmp_path}/.compact_lock"
-
-    with monkeypatch.context() as m:
-        m.setattr(
-            fsops.DriverFS, "read_text", lambda self, p: "winner:deadbeef"
-        )
-        with pytest.raises(ValueError, match="another fold holds the lock"):
-            with maintenance_lock(fs, str(tmp_path), "op_loser"):
-                raise AssertionError("unreachable")
-    # the loser left the winner's lock in place
-    assert os.path.exists(lock_path)
-    os.remove(lock_path)
-
-
 def test_row_count_absent_dir_raises_and_both_footer_routes_agree(
     spark, tmp_path
 ):
     """r16: (1) an ABSENT directory raises a ValueError naming the op —
-    a silent 0 would make check_bucket_table report a bogus
+    a silent 0 would make a row-count check report a bogus
     "divergence" when the real problem is a wrong/deleted corpus path
     (ADVICE r15). (2) The size-split walk: small files take the ONE
     whole-file read_bytes round trip, large files the positional
@@ -570,66 +466,3 @@ def test_row_count_absent_dir_raises_and_both_footer_routes_agree(
         assert fsops.driver_parquet_row_count(spark, corpus, "t") == 90
     finally:
         fsops.FOOTER_WHOLE_FILE_MAX_BYTES = orig
-
-
-def test_maintenance_lock_takeover_stale_and_fencing(spark, tmp_path):
-    """r16 stranded-lock takeover: a lock older than
-    takeover_stale_after is atomically replaced and the taker proceeds;
-    a FRESH lock still refuses even with takeover enabled; and the
-    fencing contract holds — a displaced-but-alive holder's confirm()
-    raises the named refusal WITHOUT deleting the new owner's lock
-    (abort-before-damage, the same discipline as the create race)."""
-    from contextlib import ExitStack
-
-    from youtube_analytics_lakehouse_databricks_spark.fsops import maintenance_lock
-
-    fs = DriverFS(spark, str(tmp_path), "test")
-    lock_path = str(tmp_path / ".compact_lock")
-
-    # a stranded lock from a "dead" process
-    with open(lock_path, "w") as fh:
-        fh.write("op_dead:feedface")
-    old = time.time() - 7200
-    os.utime(lock_path, (old, old))
-
-    # default (no takeover): refuse as before
-    with pytest.raises(ValueError, match="another fold holds the lock"):
-        with maintenance_lock(fs, str(tmp_path), "op_b"):
-            raise AssertionError("unreachable")
-    assert os.path.exists(lock_path)
-
-    # takeover: acquire, run, release
-    with maintenance_lock(
-        fs, str(tmp_path), "op_b", takeover_stale_after=3600
-    ) as confirm:
-        assert open(lock_path).read().startswith("op_b:")
-        confirm()
-    assert not os.path.exists(lock_path)
-
-    # a FRESH foreign lock refuses even with takeover enabled
-    with open(lock_path, "w") as fh:
-        fh.write("op_live:cafebabe")
-    with pytest.raises(ValueError, match="another fold holds the lock"):
-        with maintenance_lock(
-            fs, str(tmp_path), "op_b", takeover_stale_after=3600
-        ):
-            raise AssertionError("unreachable")
-    os.remove(lock_path)
-
-    # fencing: holder A acquires legitimately; its lock goes stale
-    # (simulated pause); B takes over; A's confirm() must raise and A's
-    # exit must NOT delete B's lock
-    with ExitStack() as stack:
-        confirm_a = stack.enter_context(
-            maintenance_lock(fs, str(tmp_path), "op_a")
-        )
-        os.utime(lock_path, (old, old))
-        confirm_b = stack.enter_context(
-            maintenance_lock(fs, str(tmp_path), "op_b", takeover_stale_after=3600)
-        )
-        with pytest.raises(ValueError, match="another fold holds the lock"):
-            confirm_a()
-        confirm_b()  # B still owns
-        # unwind: A exits first? ExitStack unwinds LIFO (B then A); B's
-        # exit deletes ITS lock, A's exit must then be a no-op
-    assert not os.path.exists(lock_path)

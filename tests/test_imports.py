@@ -117,3 +117,27 @@ def test_every_package_module_has_a_root():
     assert not orphans, "package modules no root imports:\n" + "\n".join(orphans)
     stale = sorted(m for m in UNREACHED if f"{PKG}.{m}" in seen or f"{PKG}.{m}" not in files)
     assert not stale, f"UNREACHED entries now reached or gone: {stale}"
+
+
+def test_every_all_name_exists():
+    """Each name a package module lists in ``__all__`` exists in it, so a
+    deleted definition cannot stay advertised (``from m import *`` and
+    readers of ``__all__`` would otherwise meet an AttributeError)."""
+    checked, stale = 0, []
+    for path in sorted((ROOT / PKG).rglob("*.py")):
+        module = _module_of(path)
+        for node in ast.parse(path.read_text(), str(path)).body:
+            if not (
+                isinstance(node, ast.Assign)
+                and any(isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets)
+            ):
+                continue
+            mod = importlib.import_module(module)
+            checked += 1
+            stale += [
+                f"{module}.__all__ lists {name!r}"
+                for name in ast.literal_eval(node.value)
+                if not hasattr(mod, name)
+            ]
+    assert checked >= 7, f"only {checked} modules define __all__; is the walk broken?"
+    assert not stale, "stale __all__ entries:\n" + "\n".join(stale)

@@ -6,8 +6,8 @@ scans ONLY the probed cells' code rows (plan-asserted partition
 pruning) over a corpus layout measured at a fraction of the flat-index
 bytes; residual encoding beats raw-vector PQ at the same code budget;
 recall against exact cosine is high on structured data and improves
-with n_probe; appends against the frozen quantizer + frozen codebooks
-equal a rebuild; guards are loud.
+with n_probe; the refined two-stage search equals flat IVF at an
+exhaustive budget; guards are loud and named.
 """
 
 from __future__ import annotations
@@ -20,7 +20,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from youtube_analytics_lakehouse_databricks_spark.operators.ivf_index import (
-    append_ivfpq_index,
     build_ivfpq_index,
     ivfpq_search,
 )
@@ -201,143 +200,6 @@ def test_compressed_layout_bytes_measured(spark, tmp_path):
     assert ratio < 0.2, ratio
 
 
-def test_append_equals_rebuild_under_frozen_state(spark, index, tmp_path):
-    """append_ivfpq_index encodes the batch against the FROZEN quantizer
-    and codebooks; searching the appended index equals searching an
-    index whose corpus was encoded in ONE write against the same frozen
-    state (a from-scratch build would RETRAIN on the union — at this toy
-    scale the sample bound covers the whole corpus, so the appended rows
-    would shift both the quantizer and the codebooks; the frozen-state
-    contract is exactly what append preserves). A planted duplicate of
-    an appended vector surfaces as its own top neighbor."""
-    import shutil
-
-    from youtube_analytics_lakehouse_databricks_spark.operators.ivf_index import (
-        _encode_ivfpq,
-        load_ivf_centroids,
-    )
-    from youtube_analytics_lakehouse_databricks_spark.operators.pq import PQModel
-
-    # append to a COPY: the module fixture is shared, and mutating its
-    # corpus would make sibling tests order-dependent
-    src, df = index
-    path = str(tmp_path / "appendable")
-    shutil.copytree(src, path)
-    X2 = _planted(n=60, seed=29)
-    batch = _df(spark, X2, start=N)
-    append_ivfpq_index(batch, "vec_id", "embedding", path)
-    union = df.unionByName(batch)
-
-    refpath = str(tmp_path / "ref")
-    shutil.copytree(path, refpath)
-    shutil.rmtree(f"{refpath}/corpus_pq")
-    cents = load_ivf_centroids(path)
-    model = PQModel.load(f"{path}/pq_model")
-    _encode_ivfpq(union, "vec_id", "embedding", cents, model.codebooks).write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(f"{refpath}/corpus_pq")
-
-    got = _res(ivfpq_search(spark, path, union, "vec_id", "embedding",
-                            n_probe=2, k=5, exclude_self=True))
-    want = _res(ivfpq_search(spark, refpath, union, "vec_id", "embedding",
-                             n_probe=2, k=5, exclude_self=True))
-    assert got == want
-
-    # searchability, not exactness: under 8-byte codes an exact
-    # duplicate's ADC score ties its code-sharing cellmates (another
-    # row's reconstruction can score marginally higher), so the planted
-    # duplicate of appended vector N must appear in the top-k, not
-    # necessarily at rank 1
-    dup = _df(spark, X2[:1], start=9000)
-    hits = ivfpq_search(spark, path, dup, "vec_id", "embedding",
-                        n_probe=2, k=5).collect()
-    assert N in {h["neighbor_id"] for h in hits}, hits
-
-
-def test_distributed_search_matches_collect_path(spark, index):
-    """ivfpq_search_distributed (no driver collect; query side probes
-    via Arrow, code rows join in already cell-partitioned, ADC built in
-    the per-cell kernel) returns bit-identical results to ivfpq_search
-    on the same index — both exclude_self modes, external-namespace
-    queries included."""
-    from youtube_analytics_lakehouse_databricks_spark.operators.ivf_index import (
-        ivfpq_search_distributed,
-    )
-
-    path, df = index
-    # external query namespace whose ids collide with corpus ids on
-    # purpose (the exclude_self distinction is visible)
-    queries = _df(spark, _planted(n=40, seed=99))
-    for excl in (False, True):
-        got = _res(
-            ivfpq_search_distributed(
-                spark, path, queries, "vec_id", "embedding",
-                n_probe=2, k=5, exclude_self=excl,
-            )
-        )
-        want = _res(
-            ivfpq_search(
-                spark, path, queries, "vec_id", "embedding",
-                n_probe=2, k=5, exclude_self=excl,
-            )
-        )
-        assert got == want, excl
-    assert len(got) == 40 * 5
-
-
-def test_distributed_search_exchange_count_and_bucket_elision(spark, tmp_path):
-    """Exchange accounting: the dir-partitioned code corpus hashes both
-    cogroup sides on cell (2 exchanges); with
-    build_ivfpq_index(bucket_table=...) the code rows scan as a bucketed
-    table and the corpus-side Exchange is ELIDED (1) — results stay
-    bit-identical, and appends keep the bucketed layout exchange-free."""
-    import re
-
-    from youtube_analytics_lakehouse_databricks_spark.operators.ivf_index import (
-        ivfpq_search_distributed,
-    )
-
-    spark.sql("CREATE DATABASE IF NOT EXISTS ivfpqidx")
-    df = _df(spark, _planted(seed=21))
-    plain = str(tmp_path / "plain")
-    bucketed = str(tmp_path / "bucketed")
-    kw = dict(n_cells=8, kmeans_iters=3, m=8, n_codes=64, pq_iters=5)
-    build_ivfpq_index(df, "vec_id", "embedding", plain, **kw)
-    build_ivfpq_index(
-        df, "vec_id", "embedding", bucketed,
-        bucket_table="ivfpqidx.codes_b", n_buckets=8, **kw,
-    )
-    queries = _df(spark, _planted(n=50, seed=22), start=5000)
-
-    def plan_of(path):
-        out = ivfpq_search_distributed(
-            spark, path, queries, "vec_id", "embedding", n_probe=2, k=5
-        )
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            out.explain("formatted")
-        return out, buf.getvalue()
-
-    out_p, plan_p = plan_of(plain)
-    out_b, plan_b = plan_of(bucketed)
-
-    def cell_exchanges(plan):
-        return len(re.findall(r"Arguments: hashpartitioning\(cell", plan))
-
-    assert cell_exchanges(plan_p) == 2, plan_p  # both cogroup children shuffle
-    assert cell_exchanges(plan_b) == 1, plan_b  # corpus side elided
-    assert "Bucketed: true" in plan_b, plan_b
-    assert _res(out_b) == _res(out_p)
-
-    batch = _df(spark, _planted(n=30, seed=23), start=N + 1000)
-    append_ivfpq_index(batch, "vec_id", "embedding", bucketed)
-    append_ivfpq_index(batch, "vec_id", "embedding", plain)
-    out_p2, _ = plan_of(plain)
-    out_b2, plan_b2 = plan_of(bucketed)
-    assert cell_exchanges(plan_b2) == 1, plan_b2
-    assert _res(out_b2) == _res(out_p2)
-
-
 def test_guards(spark, index, tmp_path):
     path, df = index
     strdf = df.selectExpr("CAST(vec_id AS STRING) AS vec_id", "embedding")
@@ -352,11 +214,22 @@ def test_guards(spark, index, tmp_path):
     )
     with pytest.raises(ValueError, match=f"{D}-dim"):
         ivfpq_search(spark, path, wrongd, "vec_id", "embedding")
-    with pytest.raises(Exception, match="ragged"):
-        ragged = spark.createDataFrame(
-            [(1, [1.0] * D), (2, [1.0, 2.0])], "vec_id long, embedding array<float>"
-        ).coalesce(1)
-        append_ivfpq_index(ragged, "vec_id", "embedding", path)
+    ragged = spark.createDataFrame(
+        [(1, [1.0] * D), (2, [1.0, 2.0])], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match="ivfpq_search: ragged embedding"):
+        ivfpq_search(spark, path, ragged, "vec_id", "embedding")
+    # a NULL query vector is named, alone or next to a real vector
+    null_only = spark.createDataFrame(
+        [(1, None)], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match="ivfpq_search: NULL embedding query vector"):
+        ivfpq_search(spark, path, null_only, "vec_id", "embedding")
+    null_mixed = spark.createDataFrame(
+        [(1, None), (2, [1.0] * D)], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match="ivfpq_search: NULL embedding query vector"):
+        ivfpq_search(spark, path, null_mixed, "vec_id", "embedding")
 
 
 def _ivfpq_mirror_sql(
@@ -609,13 +482,13 @@ def test_refined_search_with_exhaustive_budget_equals_flat_ivf(spark, tmp_path):
 def test_refined_search_guards_diverged_indexes(spark, tmp_path):
     """The two-index precondition fails LOUDLY, not silently: a pq/flat
     pair with different quantizers raises, and a pair whose corpora
-    diverged (an append applied to one side only) raises naming the row
-    counts — the silent-drop alternative would return stale neighbors
-    with clean ranks."""
+    diverged (extra rows on one side only) raises naming the row counts
+    — the silent-drop alternative would return stale neighbors with
+    clean ranks."""
+    import os
     import shutil
 
     from youtube_analytics_lakehouse_databricks_spark.operators.ivf_index import (
-        append_ivfpq_index,
         build_ivf_index,
         ivfpq_search_refined,
     )
@@ -637,12 +510,18 @@ def test_refined_search_guards_diverged_indexes(spark, tmp_path):
         ivfpq_search_refined(spark, pq_path, other_flat, df,
                              "vec_id", "embedding", refine=10, k=5)
 
-    # diverged corpora: append to the pq side only
+    # diverged corpora: one cell file of the pq side written twice
     pq2 = str(tmp_path / "pq2")
     shutil.copytree(pq_path, pq2)
-    append_ivfpq_index(_df(spark, _planted(n=10, seed=54), start=500),
-                       "vec_id", "embedding", pq2)
-    with pytest.raises(ValueError, match="130 rows.*120"):
+    cell_dir = next(
+        f"{pq2}/corpus_pq/{c}"
+        for c in sorted(os.listdir(f"{pq2}/corpus_pq"))
+        if c.startswith("cell=")
+    )
+    part = next(f for f in os.listdir(cell_dir) if f.endswith(".parquet"))
+    shutil.copy(f"{cell_dir}/{part}", f"{cell_dir}/dup-{part}")
+    extra = spark.read.parquet(f"{cell_dir}/{part}").count()
+    with pytest.raises(ValueError, match=f"{120 + extra} rows.*120"):
         ivfpq_search_refined(spark, pq2, flat_path, df,
                              "vec_id", "embedding", refine=10, k=5)
 
@@ -668,126 +547,3 @@ def test_refined_validate_false_same_results_on_consistent_pair(spark, tmp_path)
     b = _res(ivfpq_search_refined(spark, pq_path, flat_path, df,
                                   "vec_id", "embedding", validate=False, **kw))
     assert a == b and len(a) > 0
-
-
-def test_ivfpq_audit_self_grades_error_budget(spark, index):
-    """pq_audit's stance applied to the compressed index: the audit
-    reconstructs centroid[cell] + decode(codes) per stored row and
-    reports the error next to the data — every corpus row gets a row,
-    cos_self is high on the planted corpus (the 8-byte residual codes
-    keep most of the geometry), recon_rel_err agrees with an
-    independent numpy reconstruction, and a wrong-d audit batch fails
-    loudly."""
-    from youtube_analytics_lakehouse_databricks_spark.operators.ivf_index import (
-        ivfpq_audit,
-        load_ivf_centroids,
-    )
-    from youtube_analytics_lakehouse_databricks_spark.operators.pq import PQModel
-
-    path, df = index
-    out = {r["vec_id"]: r for r in ivfpq_audit(spark, path, df, "vec_id", "embedding").collect()}
-    assert len(out) == N
-    cs = np.array([r["cos_self"] for r in out.values()])
-    assert float(np.mean(cs)) > 0.9 and cs.max() <= 1.0 + 1e-9
-
-    # independent reconstruction for a spot row
-    cents = load_ivf_centroids(path)
-    books = np.asarray(PQModel.load(f"{path}/pq_model").codebooks)
-    stored = {
-        r["vec_id"]: (r["cell"], np.asarray(r["codes"]))
-        for r in spark.read.parquet(f"{path}/corpus_pq").collect()
-    }
-    row = df.filter("vec_id = 7").collect()[0]
-    x = np.asarray(row["embedding"], dtype=np.float64)
-    xn = x / np.linalg.norm(x)
-    cell, codes = stored[7]
-    recon = cents[cell] + np.concatenate(
-        [books[s, codes[s]] for s in range(books.shape[0])]
-    )
-    assert abs(out[7]["recon_rel_err"] - round(float(np.linalg.norm(xn - recon)), 6)) < 1e-9
-    assert out[7]["cell"] == cell
-
-    wrongd = spark.createDataFrame(
-        [(0, [1.0, 2.0])], "vec_id long, embedding array<float>"
-    )
-    with pytest.raises(Exception, match=f"{D}-dim"):
-        ivfpq_audit(spark, path, wrongd, "vec_id", "embedding").collect()
-
-
-def test_salted_distributed_search_matches_unsalted(spark, index):
-    """The n_salt hot-cell guard on the compressed layout: n_salt=3
-    sub-splits every cell's code rows by pmod(id, 3) and replicates the
-    query probes per salt — results bit-identical to the unsalted
-    distributed path and the collected path."""
-    from youtube_analytics_lakehouse_databricks_spark.operators.ivf_index import (
-        ivfpq_search_distributed,
-    )
-
-    path, df = index
-    queries = _df(spark, _planted(n=40, seed=77))
-    want = _res(
-        ivfpq_search(spark, path, queries, "vec_id", "embedding", n_probe=2, k=5)
-    )
-    for ns in (1, 3):
-        got = _res(
-            ivfpq_search_distributed(
-                spark, path, queries, "vec_id", "embedding",
-                n_probe=2, k=5, n_salt=ns,
-            )
-        )
-        assert got == want, ns
-    with pytest.raises(ValueError, match="n_salt must be >= 1"):
-        ivfpq_search_distributed(
-            spark, path, queries, "vec_id", "embedding", n_salt=0
-        )
-
-
-def test_cell_stats_on_compressed_layout(spark, index):
-    """ivf_cell_stats sniffs the corpus_pq layout and reports occupancy
-    over the code rows — same detector, 16x fewer bytes scanned."""
-    from youtube_analytics_lakehouse_databricks_spark.operators.ivf_index import ivf_cell_stats
-
-    path, _df_ = index
-    rows = ivf_cell_stats(spark, path).collect()
-    assert sum(r["n_rows"] for r in rows) == N
-    assert abs(sum(r["frac"] for r in rows) - 1.0) < 1e-9
-    assert all(r["skew"] > 0 for r in rows)
-
-
-def test_refined_distributed_matches_collected(spark, index, tmp_path):
-    """The two-stage search's corpus-sized serving path: distributed ADC
-    shortlist + candidates-only exact re-rank reproduces
-    ivfpq_search_refined bit for bit on the same index pair — both
-    exclude_self modes, salted and unsalted — and shares its refine>=k
-    and consistency guards."""
-    from youtube_analytics_lakehouse_databricks_spark.operators.ivf_index import (
-        build_ivf_index,
-        ivfpq_search_refined,
-        ivfpq_search_refined_distributed,
-    )
-
-    path, df = index
-    flat = str(tmp_path / "flat")
-    # same data, same deterministic trainer, same params -> the shared
-    # quantizer the refined pair requires
-    build_ivf_index(df, "vec_id", "embedding", flat, n_cells=8, kmeans_iters=3)
-    queries = _df(spark, _planted(n=40, seed=88))
-    for excl in (False, True):
-        want = _res(
-            ivfpq_search_refined(
-                spark, path, flat, queries, "vec_id", "embedding",
-                n_probe=2, refine=20, k=5, exclude_self=excl,
-            )
-        )
-        for ns in (1, 3):
-            got = _res(
-                ivfpq_search_refined_distributed(
-                    spark, path, flat, queries, "vec_id", "embedding",
-                    n_probe=2, refine=20, k=5, exclude_self=excl, n_salt=ns,
-                )
-            )
-            assert got == want, (excl, ns)
-    with pytest.raises(ValueError, match="refine=3 must be >= k=5"):
-        ivfpq_search_refined_distributed(
-            spark, path, flat, queries, "vec_id", "embedding", refine=3, k=5
-        )

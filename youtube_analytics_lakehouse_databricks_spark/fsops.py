@@ -1,4 +1,4 @@
-"""Scheme-safe driver-side filesystem toolkit for index maintenance.
+"""Scheme-safe driver-side filesystem toolkit for persisted artifacts.
 
 Every driver-side filesystem touch in the engine routes through one of
 two contracts defined here, so a maintenance call pointed at an
@@ -25,22 +25,15 @@ would wave through exactly the corruption it exists to prevent):
   Correct-by-fallback callers (e.g. ``watermark_of``) use
   ``is_local_path`` and take their scheme-safe Spark path.
 
-The module also hosts the compaction skeleton, ``StagedFold`` plus
-``maintenance_lock``; its one user is ``ivf_index.compact_ivf_index``.
-The fold is **stage-and-swap**: consolidated data stages under a
-dot-directory readers ignore, a manifest + completion marker commit
-the fold (both written temp -> hsync -> atomic rename, so a PRESENT
-marker implies a READABLE manifest even across power loss), and
-recovery finishes or discards. Crash-recoverable, not reader-atomic —
-a maintenance window operation, for layouts whose readers cannot
-tolerate duplicate rows (an ANN corpus partition).
+The writers here are small and driver-side: ``write_text_committed``
+(temp -> hsync -> atomic rename) for side files such as
+``CurationState``'s manifest, and ``rename``/``delete`` for its staged
+frame swap. Corpora and index cells are written by Spark, not here.
 """
 
 from __future__ import annotations
 
-import json
 import re
-from contextlib import contextmanager as _contextmanager
 
 __all__ = [
     "RemotePathError",
@@ -50,11 +43,7 @@ __all__ = [
     "driver_read_parquet",
     "driver_parquet_row_count",
     "FOOTER_WHOLE_FILE_MAX_BYTES",
-    "maintenance_lock",
-    "COMPACT_LOCK_NAME",
     "require_session",
-    "batch_partition_ids",
-    "StagedFold",
 ]
 
 
@@ -130,7 +119,7 @@ def is_local_path(path: str) -> bool:
 
 
 class DriverFS:
-    """Driver-side Hadoop FileSystem handle for index maintenance.
+    """Driver-side Hadoop FileSystem handle for persisted artifacts.
 
     One instance per (session, root) — construction resolves the root's
     FileSystem once (Hadoop caches instances per scheme+authority) and
@@ -161,26 +150,21 @@ class DriverFS:
     def isdir(self, p: str) -> bool:
         return bool(self._fs.isDirectory(self._path(p)))
 
-    def listnames(self, p: str, prefix: str | None = None) -> list[str]:
-        """Child names of directory ``p`` ([] when absent), optionally
-        filtered by prefix. Unlike ``os.listdir`` on a remote path this
-        either LISTS or the constructor already raised — never a silent
-        empty answer for a directory that exists."""
+    def listnames(self, p: str) -> list[str]:
+        """Child names of directory ``p`` ([] when absent). Unlike
+        ``os.listdir`` on a remote path this either LISTS or the
+        constructor already raised — never a silent empty answer for a
+        directory that exists."""
         if not self.isdir(p):
             return []
-        names = [
-            st.getPath().getName() for st in self._fs.listStatus(self._path(p))
-        ]
-        if prefix is not None:
-            names = [n for n in names if n.startswith(prefix)]
-        return names
+        return [st.getPath().getName() for st in self._fs.listStatus(self._path(p))]
 
     def delete(self, p: str) -> None:
         """Recursive delete; absent paths are a no-op (GC semantics).
         A ``false`` return with the path STILL PRESENT raises — Hadoop
-        signals refusal through the boolean, and a maintenance protocol
-        that proceeds past a surviving directory (e.g. a compaction
-        about to rename its staged fold into place) would silently nest
+        signals refusal through the boolean, and a staged swap that
+        proceeds past a surviving directory (e.g. ``CurationState.save``
+        about to rename its staged frame into place) would silently nest
         or duplicate data."""
         ok = bool(self._fs.delete(self._path(p), True))
         if not ok and self.exists(p):
@@ -205,17 +189,14 @@ class DriverFS:
         if not self._fs.rename(self._path(src), self._path(dst)):
             raise IOError(f"rename failed: {src} -> {dst}")
 
-    def mkdirs(self, p: str) -> None:
-        self._fs.mkdirs(self._path(p))
-
     def list_parquet_files_with_size(self, p: str) -> list[tuple[str, int]]:
         """All ``.parquet`` file paths under ``p`` (recursive) with each
         file's byte length from the SAME ``listStatus`` round-trip — so
         size-aware walkers (the footer counter's whole-file-vs-positional
         split) don't pay a second ``getFileStatus`` per file. Hidden
         (dot/underscore) segments are pruned BEFORE descending — the
-        same names Spark's readers ignore, so a staged compaction fold
-        or a ``_MANIFEST`` never counts. [] when absent."""
+        same names Spark's readers ignore, so a staged frame or a
+        ``_SUCCESS`` marker never counts. [] when absent."""
         if not self.isdir(p):
             return []
         out: list[tuple[str, int]] = []
@@ -229,56 +210,6 @@ class DriverFS:
             elif name.endswith(".parquet"):
                 out.append((full, int(st.getLen())))
         return out
-
-    def create_exclusive(self, p: str, text: str) -> None:
-        """Create-if-absent (Hadoop ``create(path, overwrite=false)``)
-        — the mutual-exclusion primitive for maintenance locks and
-        window sentinels. Raises ``FileExistsError`` when the path
-        already exists. Exclusivity honesty: the non-overwriting create
-        is ATOMIC on HDFS (namenode-arbitrated) but an exists-check +
-        plain create on the local filesystem and deferred-to-close on
-        S3A — callers needing a hard guarantee must confirm ownership
-        by reading the content back (``maintenance_lock`` does; the
-        append sentinels don't need to — their names are unique).
-        A write/close failure after the create removes the file before
-        re-raising, so a half-written marker can't strand the protocol
-        it guards (the released-on-every-exit invariant)."""
-        if self.exists(p):
-            raise FileExistsError(p)
-        try:
-            out = self._fs.create(self._path(p), False)
-        except Exception as exc:
-            if self.exists(p):  # lost the creation race
-                raise FileExistsError(p) from None
-            raise IOError(
-                f"create_exclusive failed for {p}: "
-                f"{str(exc).splitlines()[0][:200]}"
-            ) from None
-        try:
-            out.write(bytearray(text.encode("utf-8")))
-            out.close()
-        except Exception:
-            try:
-                out.close()
-            except Exception:
-                pass
-            # never strand a half-written marker — but on the shared
-            # lock NAME a racer may have read-back-confirmed the file
-            # we'd be deleting (non-atomic-create filesystems), so only
-            # remove it when the content reads back as OURS or empty
-            # (i.e. genuinely half-written). When the read-back itself
-            # fails we can't tell whose file it is: leave it in place —
-            # a stranded marker has a named remediation, a deleted
-            # winner's lock admits two live folds (maintenance_lock's
-            # own stance). Sentinel names are unique, so for them the
-            # ownership check always passes when readable.
-            try:
-                if self.read_text(p) in ("", text):
-                    self.delete(p)
-            except Exception:
-                pass  # unreadable: prefer a stranded marker over
-                # deleting a possibly-owned lock
-            raise
 
     def read_text(self, p: str) -> str:
         stream = self._fs.open(self._path(p))
@@ -305,12 +236,12 @@ class DriverFS:
         """Write a small text file ATOMICALLY: temp name -> hsync (where
         the filesystem supports it) -> rename into place. A reader that
         sees ``p`` therefore sees its full content — never a torn write
-        after power loss (the compaction manifests' requirement). On
+        after power loss (the frame manifest's requirement). On
         stores whose rename is copy+delete (S3A), the copy's object PUT
         is still all-or-nothing, so the full-content guarantee holds; a
         crash mid-rename can at worst leave the temp file behind, which
-        recovery discards. An EXISTING ``p`` is replaced with an ATOMIC
-        overwrite rename (FileContext's POSIX Rename.OVERWRITE), so a
+        the next committed write of ``p`` overwrites. An EXISTING ``p``
+        is replaced with an ATOMIC overwrite rename (FileContext's POSIX Rename.OVERWRITE), so a
         concurrent reader always sees either the old or the new full
         content — never an absent file that would read as
         never-written. On stores with no FileContext binding the
@@ -444,10 +375,10 @@ class _HadoopSeekableFile:
 # Files at or below this size are fetched with ONE whole-file
 # ``read_bytes`` round-trip instead of the 4+ positional footer reads
 # a seekable stream costs (open, magic/length seek+read, footer read,
-# close — each a py4j round trip, ~6 ms/file measured). Every
-# metadata-only cell file a fragmented append produces sits far below
-# it; genuinely large data files keep the positional route so the walk
-# never pulls row-group DATA over the wire just to read a footer.
+# close — each a py4j round trip, ~6 ms/file measured). Small cell
+# files sit far below it; genuinely large data files keep the
+# positional route so the walk never pulls row-group DATA over the wire
+# just to read a footer.
 FOOTER_WHOLE_FILE_MAX_BYTES = 1 << 20
 
 
@@ -455,16 +386,15 @@ def driver_parquet_row_count(spark, directory: str, op: str) -> int:
     """Total stored rows under a parquet directory tree, driver-side
     through the session's Hadoop FileSystem, FOOTER METADATA ONLY —
     zero Spark jobs: the object-store sibling of the local pyarrow
-    ``count_rows`` fast path. For AUDITS over corpora (row-count
-    divergence checks), where a corpus-wide Spark ``count()`` per audit
-    would scan TB to answer a question the footers already hold. Hidden
-    (dot/underscore) segments are pruned like Spark's readers do, so
-    staged compaction folds and manifests never count. Raises the named
-    ``RemotePathError`` when the scheme is unreachable and a plain
-    ValueError naming ``op`` when the directory is ABSENT — a missing
-    corpus must read as an error, not a 0 that a divergence audit would
-    misreport as "corpus diverged from bucket table". An existing but
-    empty tree counts 0.
+    ``count_rows`` fast path. For row-count checks over corpora (the
+    refined search's pq/flat pair check), where a corpus-wide Spark
+    ``count()`` would scan TB to answer a question the footers already
+    hold. Hidden (dot/underscore) segments are pruned like Spark's
+    readers do. Raises the named ``RemotePathError`` when the scheme is
+    unreachable and a plain ValueError naming ``op`` when the directory
+    is ABSENT — a missing corpus must read as an error, not a 0 that a
+    row-count check would misreport as diverged corpora. An existing
+    but empty tree counts 0.
 
     Honest cost: driver-side round-trips PER FILE, so the walk's wall
     time scales with file count, not data size. Small files (≤
@@ -475,9 +405,7 @@ def driver_parquet_row_count(spark, directory: str, op: str) -> int:
     Measured on the local FS (254-file fragmented fixture, warm):
     r15 all-positional walk 6.0 ms/file; whole-file route 4.0 ms/file —
     the per-file py4j calls drop from ~6 (open, status, footer
-    seek/read pairs, close) to 3 (open, one toByteArray, close). The
-    residual file-count-bound cost shares its remediation with the
-    scan path: ``compact_ivf_index``."""
+    seek/read pairs, close) to 3 (open, one toByteArray, close)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -485,7 +413,7 @@ def driver_parquet_row_count(spark, directory: str, op: str) -> int:
     if not fs.isdir(directory):
         raise ValueError(
             f"{op}: {directory} does not exist — refusing to report 0 "
-            "rows for an absent corpus (a divergence audit would "
+            "rows for an absent corpus (a row-count check would "
             "misread it as data loss; check the index path/layout)"
         )
     total = 0
@@ -500,132 +428,6 @@ def driver_parquet_row_count(spark, directory: str, op: str) -> int:
         finally:
             f.close()
     return total
-
-
-COMPACT_LOCK_NAME = ".compact_lock"
-
-
-@_contextmanager
-def maintenance_lock(
-    fs: DriverFS,
-    parent_dir: str,
-    op: str,
-    takeover_stale_after: float | None = None,
-):
-    """Fold-vs-fold mutual exclusion for the compactions: one
-    exclusive-create ``.compact_lock`` under the artifact, held for the
-    whole maintenance call and released on EVERY exit path (so an
-    exception-path failure never strands it — only a process death
-    does, and the refusal names the file). Why the fold takes it: a
-    concurrent stage-and-swap fold's recover() can re-apply a committed
-    manifest mid-swap and delete the freshly swapped-in only copy (data
-    loss). The lock converts every such interleaving into one named,
-    wait-and-rerun error.
-
-    Exclusivity, stated precisely: ``create_exclusive`` is atomic on
-    HDFS (namenode-arbitrated — the guarantee is hard there) but an
-    exists-check + create on the local FS and S3A, so acquisition is
-    CONFIRMED by reading back a unique token. The operational race the
-    lock exists for — an operator or scheduler starting a second fold
-    seconds-to-minutes into the first — is closed outright on every
-    filesystem. The residual on non-atomic-create filesystems is two
-    folds entering the create within the same few milliseconds; the
-    read-back disqualifies a caller whose token didn't survive, but an
-    interleaving where A confirms BEFORE B's write lands can admit
-    both. That is why the yield value is a zero-arg ``confirm``
-    callable: destructive phases (a stage-and-swap's apply) call it to
-    RE-verify ownership at the last moment, turning the residual into
-    an abort-before-damage (a caller that lost the lock raises the
-    named error WITHOUT cleaning up — the stage now belongs to the
-    winner). Perfect mutual exclusion without an atomic primitive or
-    fencing tokens is not possible; this is the honest approximation,
-    and on HDFS the create alone already provides the hard version.
-
-    A transient read failure during confirmation retries three times
-    before backing off; if the caller had in fact created the lock,
-    backing off strands it (named stale-lock remediation applies) —
-    preferring a stranded lock over two live folds.
-
-    ``takeover_stale_after`` (r16, default None = never): a lock whose
-    mtime is older than this many seconds is treated as stranded by a
-    DEAD process and TAKEN OVER — atomically replaced
-    (``write_text_committed``) with this caller's token, then
-    read-back confirmed like a normal acquisition. This automates the
-    runbook's manual stale-lock step for scheduled maintenance WITHOUT
-    weakening the read-back guarantee, because the fencing is the same
-    ``confirm()`` discipline the lock already has: if the "dead"
-    holder is in fact alive (paused, thrashing), its token no longer
-    reads back, so its next pre-destructive ``confirm()`` raises and
-    it aborts WITHOUT cleanup — abort-before-damage, never two live
-    folds past a destructive step. Residual risks, stated honestly:
-    (1) an alive-but-displaced holder loses work it had already staged
-    (spurious abort, no data loss — its stage belongs to the new
-    owner's recovery); (2) between the staleness stat and the replace,
-    the old holder could finish, release, and a FRESH fold acquire —
-    the replace then displaces a live fold (same spurious-abort
-    outcome, a milliseconds-wide window that needs the stale holder to
-    finish at that exact instant); (3) a holder that strands BETWEEN
-    its confirm() and one destructive step cannot be fenced by any
-    file-content scheme — size ``takeover_stale_after`` well above any
-    legitimate fold duration (hours, not minutes). Two concurrent
-    takeovers resolve like two concurrent creates: last write survives
-    the read-back, the loser refuses."""
-    lock = f"{parent_dir}/{COMPACT_LOCK_NAME}"
-    import time as _time
-    from uuid import uuid4 as _uuid4
-
-    token = f"{op}:{_uuid4().hex}"
-
-    def _refusal() -> ValueError:
-        return ValueError(
-            f"{op}: another fold holds the lock under {parent_dir} "
-            f"({lock}) — concurrent folds on one artifact can destroy "
-            "or double-count data; wait for it to finish. If the "
-            "previous fold's PROCESS died (no fold is running), delete "
-            "the lock file and rerun — recovery then finishes or "
-            "discards its work."
-        )
-
-    def _owns() -> bool:
-        for attempt in range(3):
-            try:
-                return fs.read_text(lock) == token
-            except Exception:
-                _time.sleep(0.05 * (attempt + 1))
-        return False  # persistently unreadable: do not claim ownership
-
-    def _lock_age() -> float | None:
-        try:
-            st = fs._fs.getFileStatus(fs._path(lock))
-        except Exception:
-            return None  # vanished (released) or unreadable
-        return max(0.0, _time.time() * 1000.0 - st.getModificationTime()) / 1000.0
-
-    try:
-        fs.create_exclusive(lock, token)
-    except FileExistsError:
-        age = _lock_age() if takeover_stale_after is not None else None
-        if age is None or age <= float(takeover_stale_after):
-            raise _refusal() from None
-        # stranded-lock takeover: atomic replace + the usual read-back;
-        # a displaced-but-alive holder is fenced by its own confirm()
-        fs.write_text_committed(lock, token)
-    owned = False
-    try:
-        owned = _owns()
-        if not owned:
-            raise _refusal()
-
-        def confirm() -> None:
-            nonlocal owned
-            if not _owns():
-                owned = False  # the winner's lock is not ours to delete
-                raise _refusal()
-
-        yield confirm
-    finally:
-        if owned:
-            fs.delete(lock)
 
 
 def require_session(spark, path: str, op: str):
@@ -644,52 +446,3 @@ def require_session(spark, path: str, op: str):
             "Hadoop FileSystem; pass spark= or start a session first"
         )
     return spark
-
-
-def batch_partition_ids(fs: DriverFS, directory: str) -> list[int]:
-    """Sorted numeric ``batch_id=K`` partition ids under ``directory``
-    (the layout earlier versions' streamed artifacts wrote); [] when
-    absent."""
-    return sorted(
-        int(n.split("=", 1)[1]) for n in fs.listnames(directory, prefix="batch_id=")
-    )
-
-
-class StagedFold:
-    """The stage -> commit -> apply/recover state machine for swap-style
-    compaction (see the module docstring).
-
-    Protocol, in order:
-    1. caller writes consolidated data under ``stage_dir`` (a
-       dot-directory Spark readers ignore);
-    2. ``commit(manifest)`` — the manifest (what was folded, where the
-       staged data goes) lands via an atomic committed write, then the
-       completion marker does; a present marker implies a readable
-       manifest;
-    3. caller applies the fold (delete originals, rename staged in) and
-       calls ``cleanup()``.
-    ``recover()`` (call FIRST): a present marker returns the committed
-    manifest so the caller re-applies the fold; otherwise uncommitted
-    leftovers are discarded and None is returned."""
-
-    MANIFEST = "_MANIFEST"
-    MARKER = "_COMPLETE"
-
-    def __init__(self, fs: DriverFS, parent_dir: str):
-        self.fs = fs
-        self.stage_dir = f"{parent_dir}/.compact_tmp"
-
-    def recover(self) -> dict | None:
-        if self.fs.exists(f"{self.stage_dir}/{self.MARKER}"):
-            return json.loads(self.fs.read_text(f"{self.stage_dir}/{self.MANIFEST}"))
-        self.fs.delete(self.stage_dir)  # uncommitted leftovers: discard
-        return None
-
-    def commit(self, manifest: dict) -> None:
-        self.fs.write_text_committed(
-            f"{self.stage_dir}/{self.MANIFEST}", json.dumps(manifest)
-        )
-        self.fs.write_text_committed(f"{self.stage_dir}/{self.MARKER}", "ok")
-
-    def cleanup(self) -> None:
-        self.fs.delete(self.stage_dir)
